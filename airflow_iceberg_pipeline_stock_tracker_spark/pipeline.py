@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -173,13 +174,19 @@ def _clear_stale_location(spark: SparkSession, name: str) -> None:
     fails with LOCATION_ALREADY_EXISTS. Only reached when the table is
     already absent from the catalog (the DROP just ran), so removing the
     orphaned directory can never delete live data.
+
+    ``name`` may be ``table``, ``db.table`` or ``catalog.db.table``; the
+    directory depends on the last two parts only. Only a local warehouse
+    (a ``file:`` URI or a plain path) is cleared; any other filesystem is
+    left alone.
     """
     import shutil
 
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh = wh.removeprefix("file:")
-    db, _, table = name.rpartition(".")
-    path = os.path.join(wh, f"{db.lower()}.db", table.lower()) if db else os.path.join(wh, table.lower())
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
+    if wh.scheme not in ("", "file"):
+        return
+    *db, table = name.lower().split(".")[-2:]
+    path = os.path.join(wh.path, *(f"{d}.db" for d in db), table)
     shutil.rmtree(path, ignore_errors=True)
 
 

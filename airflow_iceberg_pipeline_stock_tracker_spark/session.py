@@ -15,6 +15,16 @@ behave on local[N]:
   comparable against the DuckDB oracle (DuckDB timestamps are tz-naive).
 * Arrow enabled: every pandas_udf / createDataFrame(pandas) call moves
   columns in Arrow batches instead of pickled rows.
+* DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  PySpark 4 wraps every DataFrame/Column/functions call in about six
+  extra py4j round trips (``getActiveSession``, a conf ``get``,
+  ``PySparkCurrentOrigin`` set and clear) to record the Python call site
+  for error messages. A warm daily ``pipeline.run_for_date`` made about
+  1,920 round trips at 5 tickers and 3,900 at 500 with it on; with it
+  off, and ``dq_checks`` building its ticker set as SQL text, it makes
+  about 630 at either size. Only the Python line in DataFrame error
+  messages is lost; the JVM error itself is unchanged.
 """
 
 from __future__ import annotations
@@ -65,6 +75,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # idempotent partition-scoped rewrites (reference's delete-then-insert,
         # dag.py:294+308) become one atomic INSERT OVERWRITE per partition:
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -9,6 +9,7 @@ declaratively rather than materializing and filtering in Python.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -16,6 +17,10 @@ from pyspark.sql import functions as F
 from ..schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# local_df flips a session-global conf around createDataFrame; callers on
+# other driver threads (e.g. a ThreadPoolExecutor) must not interleave.
+_ARROW_FALLBACK_LOCK = threading.Lock()
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -65,15 +70,16 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
             },
             columns=names,
         )
-        prior = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "false")
-        try:
-            return spark.createDataFrame(pdf, schema=st)
-        finally:
-            if prior is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prior)
+        with _ARROW_FALLBACK_LOCK:
+            prior = spark.conf.get(conf_key, None)
+            spark.conf.set(conf_key, "false")
+            try:
+                return spark.createDataFrame(pdf, schema=st)
+            finally:
+                if prior is None:
+                    spark.conf.unset(conf_key)
+                else:
+                    spark.conf.set(conf_key, prior)
     except Exception:
         return spark.createDataFrame(rows, schema)
 

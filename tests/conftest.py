@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
+import gc
 import os
 import sys
+from types import SimpleNamespace
 
 import pytest
 
@@ -19,3 +22,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture()
+def count_round_trips():
+    """Context manager counting py4j round trips (Python -> driver JVM
+    commands) made inside its block. gc is off in the block so that
+    finalizers releasing JVM objects do not add to the count."""
+    from py4j.clientserver import ClientServerConnection
+
+    @contextlib.contextmanager
+    def counting():
+        trips = SimpleNamespace(count=0)
+        send = ClientServerConnection.send_command
+
+        def counted_send(conn, command, *args, **kwargs):
+            trips.count += 1
+            return send(conn, command, *args, **kwargs)
+
+        gc_was_enabled = gc.isenabled()
+        gc.disable()
+        ClientServerConnection.send_command = counted_send
+        try:
+            yield trips
+        finally:
+            ClientServerConnection.send_command = send
+            if gc_was_enabled:
+                gc.enable()
+
+    return counting

@@ -125,3 +125,56 @@ def test_decimal_inputs(spark):
     ]
     m = _checks_map(spark.createDataFrame(rows, schema))
     assert all(r.status == "PASS" for r in m.values())
+
+
+QUOTED_TICKERS = ["BRK'B", "A\\B", "X\\'Y"]
+
+
+def test_quoted_and_backslashed_tickers_are_valid(spark):
+    # each ticker is one escaped SQL literal: quotes and backslashes
+    # neither end the literal nor vanish from it
+    df = spark.createDataFrame([_row(t) for t in QUOTED_TICKERS], SCHEMA)
+    m = _checks_map(df, tickers=QUOTED_TICKERS)
+    assert all(r.status == "PASS" for r in m.values())
+    assert m["Invalid ticker format"].actual_count == 0
+    assert m["Missing stocks check"].actual_count == 3
+
+
+def test_unknown_ticker_fails_next_to_quoted_ones(spark):
+    rows = [_row(t) for t in QUOTED_TICKERS] + [_row("BRKB"), _row("A\\\\B")]
+    m = _checks_map(spark.createDataFrame(rows, SCHEMA), tickers=QUOTED_TICKERS)
+    assert m["Invalid ticker format"].status == "FAIL"
+    assert m["Invalid ticker format"].actual_count == 2
+
+
+def test_large_ticker_set_is_an_inset(spark):
+    tickers = [f"T{i:02d}" for i in range(11)]
+    df = spark.createDataFrame([_row(t) for t in tickers], SCHEMA)
+    checks = dq_checks(df, DS, tickers)
+    assert "INSET" in checks._jdf.queryExecution().optimizedPlan().toString()
+    assert all(r.status == "PASS" for r in checks.collect())
+
+
+def test_ds_is_parsed_before_sql_is_built(spark, count_round_trips):
+    df = spark.createDataFrame([_row(t) for t in TICKERS], SCHEMA)
+    with count_round_trips() as trips, pytest.raises(ValueError):
+        dq_checks(df, "2024-01-10' OR '1'='1", TICKERS)
+    assert trips.count == 0
+
+
+def test_building_checks_for_500_tickers_is_a_few_round_trips(
+    spark, count_round_trips
+):
+    # Column.isin over 500 tickers alone made about 2,750 round trips
+    tickers = [f"T{i:03d}" for i in range(500)]
+    df = spark.createDataFrame([_row(t) for t in tickers], SCHEMA)
+    with count_round_trips() as trips:
+        dq_checks(df, DS, tickers)
+    assert trips.count < 100
+
+
+def test_empty_ticker_list_marks_every_ds_row_invalid(spark):
+    rows = [_row(t) for t in TICKERS] + [_row(None), _row("AAPL", date="2024-01-09")]
+    m = _checks_map(spark.createDataFrame(rows, SCHEMA), tickers=[])
+    assert m["Invalid ticker format"].actual_count == 6
+    assert m["Missing stocks check"].expected_count == 0

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import shutil
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -255,3 +256,48 @@ def test_micro_batch_parity_twice_same_session(spark, sf_dir):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def test_clear_stale_location_resolves_catalog_qualified_name(tmp_path):
+    stale = tmp_path / "pipetest.db" / "daily_stock_prices_stg_20240102"
+    stale.mkdir(parents=True)
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key, default=None: f"file:{tmp_path}")
+    )
+    pipeline._clear_stale_location(
+        spark, "spark_catalog.PipeTest.daily_stock_prices_stg_20240102"
+    )
+    assert not stale.exists()
+    assert (tmp_path / "pipetest.db").exists()
+
+
+def test_clear_stale_location_leaves_remote_warehouse_alone(monkeypatch):
+    removed = []
+    monkeypatch.setattr(shutil, "rmtree", lambda *a, **kw: removed.append(a))
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key, default=None: "hdfs://nn:8020/wh")
+    )
+    pipeline._clear_stale_location(spark, "pipetest.daily_stock_prices")
+    assert removed == []
+
+
+def test_warm_day_round_trips_do_not_grow_with_tickers(spark, count_round_trips):
+    """A warm daily run's driver chatter is per job and per table, not
+    per ticker (Column.isin over 500 tickers made a 500-ticker day cost
+    about 2x a 5-ticker one)."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    trips = {}
+    for n in (5, 500):
+        db = f"pipetrips{n}"
+        tickers = [f"T{i:03d}" for i in range(n)]
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
+        try:
+            pipeline.run_for_date(spark, "2024-01-02", tickers=tickers, db=db)
+            with count_round_trips() as t:
+                pipeline.run_for_date(spark, "2024-01-03", tickers=tickers, db=db)
+            trips[n] = t.count
+        finally:
+            spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+            shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
+    assert trips[500] <= 1.5 * trips[5], trips

@@ -16,6 +16,10 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -63,6 +67,39 @@ def test_local_df_is_arrow_backed(spark):
     plan = local_df(spark, MIXED_ROWS, MIXED_SCHEMA)._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
+
+
+def test_local_df_concurrent_calls_restore_fallback_conf(spark, monkeypatch):
+    # local_df turns Arrow fallback off around createDataFrame. The other
+    # threads start while the first is inside that window; unguarded, one
+    # of them reads "false" as the prior value and restores it last.
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    prior = spark.conf.get(key, None)
+    create = spark.createDataFrame
+    inside = threading.Event()
+
+    def slow_create(*args, **kwargs):
+        inside.set()
+        time.sleep(0.1)
+        return create(*args, **kwargs)
+
+    def plan(i):
+        if i:
+            assert inside.wait(timeout=30)
+        df = local_df(spark, MIXED_ROWS, MIXED_SCHEMA)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    monkeypatch.setattr(spark, "createDataFrame", slow_create)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            plans = list(pool.map(plan, range(8), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(plans) == 8
+    assert all("LocalTableScan" in p for p in plans)
+    assert spark.conf.get(key, None) == prior
 
 
 def test_local_df_empty_rows(spark):
