@@ -131,11 +131,3 @@ def char_shingles(col_name: str, k: int = 9) -> Column:
             f"i -> substring({col_name}, i, {k}))"
         )
     )
-
-
-def char_shingles_sql(expr: str, k: int = 9) -> str:
-    return (
-        f"CASE WHEN length({expr}) <= {k} THEN [{expr}] "
-        f"ELSE [substr({expr}, i, {k}) "
-        f"      for i in range(1, length({expr}) - {k - 2})] END"
-    )

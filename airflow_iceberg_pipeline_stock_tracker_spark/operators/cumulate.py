@@ -126,32 +126,6 @@ def explode_rolling(df: DataFrame) -> DataFrame:
     )
 
 
-def cumulate_oracle_sql(ds: str | None = None) -> str:
-    """DuckDB twin over a `prices` relation (ticker/date/OHLCV columns)."""
-    src = "prices"
-    if ds is not None:
-        src = f"""(SELECT * FROM prices
-                   WHERE date >= DATE '{ds}' - INTERVAL 7 DAY
-                     AND date <= DATE '{ds}')"""
-    post = f"WHERE date = DATE '{ds}'" if ds is not None else ""
-    return f"""
-WITH windowed AS (
-  SELECT ticker, date,
-         list(open)  OVER w AS last_7_days_open,
-         list(high)  OVER w AS last_7_days_high,
-         list(low)   OVER w AS last_7_days_low,
-         list(close) OVER w AS last_7_days_close,
-         list(volume) OVER w AS last_7_days_volume,
-         ROUND(AVG(volume) OVER w, 2) AS avg_7_day_volume,
-         ROUND(COALESCE(STDDEV_SAMP(close) OVER w, 0), 4) AS volatility_7_day
-  FROM {src}
-  WINDOW w AS (PARTITION BY ticker ORDER BY date
-               ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-)
-SELECT * FROM windowed {post}
-"""
-
-
 def cumulate_flat_oracle_sql(ds: str | None = None) -> str:
     """DuckDB twin of `cumulate_flat` — equal-length unnests zip in
     lockstep, so idx and the five array columns stay frame-aligned."""

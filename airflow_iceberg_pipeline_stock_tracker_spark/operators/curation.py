@@ -679,18 +679,6 @@ def source_overlap(docs: DataFrame, pairs: DataFrame | None = None) -> DataFrame
     )
 
 
-SOURCE_OVERLAP_SQL = """
-WITH per_src AS (
-  SELECT DISTINCT md5(text) AS h, source FROM documents
-)
-SELECT a.source AS source_a, b.source AS source_b,
-       COUNT(*) AS n_shared_texts
-FROM per_src a JOIN per_src b ON a.h = b.h AND a.source < b.source
-GROUP BY 1, 2
-ORDER BY source_a, source_b
-"""
-
-
 def _source_overlap_sql(pairs_sql: str) -> str:
     """Oracle for the exact+near form: FULL OUTER of the exact-dup pair
     counts with cross-source counts over the given miner's pair set."""

@@ -191,6 +191,17 @@ def _seed_pred(n: int):
     return (F.col("vec_id") % RAG_SID == 0) & (F.col("vec_id") < n * RAG_SID)
 
 
+def _split_seeds(rows) -> tuple[list, list]:
+    """(coarse seeds, PQ seeds) out of collected rows in vec_id order:
+    each trainer gets exactly the rows its own ``_seed_pred(n)`` selects,
+    whichever of RAG_CELLS / RAG_CODES is larger."""
+    first = [r for r in rows if r["vec_id"] % RAG_SID == 0]
+    return (
+        [r for r in first if r["vec_id"] < RAG_CELLS * RAG_SID],
+        [r for r in first if r["vec_id"] < RAG_CODES * RAG_SID],
+    )
+
+
 def _query_pred():
     """Query panel: chunk 1 of docs 0..RAG_QUERY_DOCS-1 — second
     chunks, so a query is never one of the coarse/PQ seeds; docs with a
@@ -231,16 +242,7 @@ def rag_recall(
         .orderBy("vec_id")
         .collect()
     )
-    cseed = [
-        r
-        for r in pre_rows
-        if r["vec_id"] % RAG_SID == 0 and r["vec_id"] < RAG_CELLS * RAG_SID
-    ]
-    pseed = [
-        r
-        for r in pre_rows
-        if r["vec_id"] % RAG_SID == 0 and r["vec_id"] < RAG_CODES * RAG_SID
-    ]
+    cseed, pseed = _split_seeds(pre_rows)
     qrows = [r for r in pre_rows if r["vec_id"] % RAG_SID == 1]
     cmat = _train_coarse(emb, RAG_CELLS, IVFPQ_COARSE_ITERS, seed_rows=cseed)
     pqmat, valid = _train_residual_pq(
@@ -773,14 +775,13 @@ def rag_write_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     np = _np()
     emb = chunk_vectors(load_table(spark, sf_dir, "documents")).persist()
     # one collect funds both trainers' seeds (guide §1.2; same fusion as
-    # rag_recall — subsets re-derived by the trainers' own predicates in
-    # the same vec_id order)
+    # rag_recall — _split_seeds re-derives each trainer's subset)
     seed_rows = (
         emb.where(_seed_pred(max(RAG_CELLS, RAG_CODES)))
         .orderBy("vec_id")
         .collect()
     )
-    cseed = [r for r in seed_rows if r["vec_id"] < RAG_CELLS * RAG_SID]
+    cseed, pseed = _split_seeds(seed_rows)
     # the vectors dump depends only on the cached embeddings, not on the
     # trainers — run it on a driver thread so its tasks back-fill the
     # executor slots the 12-partition trainer passes leave idle (guide
@@ -795,7 +796,7 @@ def rag_write_index(spark: SparkSession, sf_dir: str, path: str) -> None:
             emb, RAG_CELLS, IVFPQ_COARSE_ITERS, seed_rows=cseed
         )
         pqmat, valid = _train_residual_pq(
-            emb, cmat, RAG_CODES, IVFPQ_PQ_ITERS, seed_rows=seed_rows
+            emb, cmat, RAG_CODES, IVFPQ_PQ_ITERS, seed_rows=pseed
         )
         vec_fut.result()
     # local_df (Arrow-backed LocalTableScan): a coalesce(1) write of a

@@ -119,15 +119,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         outputMode="append",
         timeMode="none",
     )
-
-
-RUNNING_TOTALS_SQL = """
-SELECT event_id, user_id,
-       CAST(ROW_NUMBER() OVER w AS BIGINT) AS n_so_far,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) OVER w AS BIGINT)
-         AS cents_so_far
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-ORDER BY event_id
-"""

@@ -106,12 +106,24 @@ def test_unknown_name_raises_value_error(monkeypatch):
         entry.queries()
 
 
-def test_bench_headline_covers_the_whole_registry():
-    """Every registered query must be in bench.HEADLINE and vice versa —
-    a query missing from HEADLINE is silently unbenched (two r9-wave-1
-    rows shipped that way and were only caught by diffing BENCH_DETAIL
-    coverage against the registry); a HEADLINE name missing from the
-    registry would crash the bench at runtime."""
+def test_bench_names_are_registered():
+    """bench.py benches every registered row by iterating queries(), but
+    keys its side tables by name; a stale name there crashes or silently
+    skips a receipt only minutes into a bench run, so pin them here."""
     import bench
 
-    assert set(bench.HEADLINE) == set(entry.queries())
+    registered = set(entry.queries())
+    assert set(bench.TREND) <= registered
+    superseded = {
+        s["superseded_by"] for s in bench.TREND.values() if "superseded_by" in s
+    }
+    assert superseded <= set(bench.TREND)
+    assert len(bench.R2_COMMON_SET) == 47
+    assert bench.R2_COMMON_SET <= registered
+    assert bench.RUN_ONCE <= bench.PROOF_TIER <= registered
+    assert bench._STORAGE_SENSITIVE <= registered
+    # receipts write into their trend row, so the row must be trended
+    assert {row for row, _key, _fn in bench.RECEIPTS} <= set(bench.TREND)
+    for _label, _make_dir, names, _key, _note in bench.POINTS:
+        assert set(names) <= registered
+    assert set(bench._DEEP_ACCURACY) <= set(bench.DEEP_EVENTS_QUERIES)

@@ -39,7 +39,7 @@ def plain_emb(spark, sf_dir):
 @pytest.fixture(scope="module")
 def saturated_emb(spark, sf_dir):
     """Every vector replicated REPS times under shifted ids — the bench
-    _build_scale_dir construction (exact-duplicate replicas)."""
+    _replica_dir construction (exact-duplicate replicas)."""
     emb = load_table(spark, sf_dir, "embeddings")
     reps = spark.range(REPS).withColumnRenamed("id", "rep")
     return (

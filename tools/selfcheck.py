@@ -17,8 +17,8 @@ hash-green under every fetchall-based harness yet red under the driver):
     `sdf.toPandas()` and `rel.df()`, is therefore a FAILURE here even
     when the value hashes agree.
 
-By default runs only the first 50 SWEEP_ORDER queries — the driver's
-exact correctness budget. `--all` sweeps the registered tail too.
+By default runs only the SWEEP_CHECKED rows — the correctness gate's
+exact budget. `--all` sweeps the registered tail too.
 
 Usage:  python tools/selfcheck.py [--all] [sf_dir] [query ...]
 """
@@ -183,8 +183,8 @@ def main() -> int:
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     if not run_all and not only:
-        # the driver checks exactly the first 50 registered queries
-        budget = set(entrymod.SWEEP_ORDER[:50])
+        # the correctness gate checks exactly the SWEEP_CHECKED prefix
+        budget = set(entrymod.SWEEP_CHECKED)
         queries = {n: fn for n, fn in queries.items() if n in budget}
     failures = []
     for name, fn in queries.items():
