@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,7 +51,9 @@ from .schemas import (
     REFERENCE_TICKERS,
     STOCK_PRICE_SCHEMA,
 )
+from .sources import snapshots
 from .sources.stock_api import BarClient, DeterministicBarClient, bars_to_df, fetch_bars
+from .sources.tables import local_df
 
 DEFAULT_DB = "jakebuto"  # the reference's schema/namespace (dag.py:14,119)
 PROD_TABLE = "daily_stock_prices"
@@ -180,8 +183,6 @@ def _clear_stale_location(spark: SparkSession, name: str) -> None:
     (a ``file:`` URI or a plain path) is cleared; any other filesystem is
     left alone.
     """
-    import shutil
-
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
     if wh.scheme not in ("", "file"):
         return
@@ -435,6 +436,32 @@ def backfill(
     return done
 
 
+def _bars(spark: SparkSession, dates: list[str]) -> DataFrame:
+    """The deterministic client's bars for ``dates`` as one frame, with
+    the wall-clock ``insertion_timestamp`` dropped so the snapshot demos
+    stay comparable with their oracles."""
+    client = DeterministicBarClient()
+    return bars_to_df(
+        spark, [bar for ds in dates for bar in fetch_bars(client, ds)]
+    ).drop("insertion_timestamp")
+
+
+def _per_ticker(df: DataFrame, *aggs, **evidence) -> DataFrame:
+    """Per-ticker ``n_rows`` and ``sum_volume`` (then ``aggs``) of
+    ``df``, each ``evidence`` value appended as a literal column, ordered
+    by ticker — the surface the snapshot demos return."""
+    return (
+        df.groupBy("ticker")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("volume").alias("sum_volume"),
+            *aggs,
+        )
+        .select("*", *[F.lit(v).alias(k) for k, v in evidence.items()])
+        .orderBy("ticker")
+    )
+
+
 def snapshot_time_travel_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     """Time travel exercised end-to-end on the snapshot layer
     (sources/snapshots.py — the manifest-swap re-creation of the
@@ -446,22 +473,9 @@ def snapshot_time_travel_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     column: v1 must still show exactly the pre-append state after v2
     lands. Surface: (version, ticker, date, close double, volume).
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
-    d12 = bars_to_df(
-        spark,
-        fetch_bars(client, EVOLUTION_DATES[0]) + fetch_bars(client, EVOLUTION_DATES[1]),
-    ).drop("insertion_timestamp")
-    snapshots.commit(d12, table_dir, mode="overwrite")
-    d3 = bars_to_df(spark, fetch_bars(client, EVOLUTION_DATES[2])).drop(
-        "insertion_timestamp"
-    )
-    v2 = snapshots.commit(d3, table_dir, mode="append")
+    snapshots.commit(_bars(spark, EVOLUTION_DATES[:2]), table_dir, mode="overwrite")
+    v2 = snapshots.commit(_bars(spark, EVOLUTION_DATES[2:]), table_dir, mode="append")
     assert snapshots.history(table_dir) == [1, 2] and v2 == 2
     out = None
     for ver in (1, 2):
@@ -496,19 +510,8 @@ def snapshot_wap_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     gate caught, and that the publish happened) — all deterministic
     from the bar client, so the oracle regenerates it closed-form.
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
-    d1 = bars_to_df(spark, fetch_bars(client, EVOLUTION_DATES[0])).drop(
-        "insertion_timestamp"
-    )
-    d2 = bars_to_df(spark, fetch_bars(client, EVOLUTION_DATES[1])).drop(
-        "insertion_timestamp"
-    )
+    d1, d2 = (_bars(spark, [ds]) for ds in EVOLUTION_DATES[:2])
     snapshots.commit(d1, table_dir, mode="overwrite")
 
     corrupted = d2.withColumn("volume", -F.col("volume"))
@@ -586,31 +589,15 @@ def snapshot_mor_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     final table + the compaction-parity bit — all deterministic from
     the bar client, so the oracle regenerates it closed-form.
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
-
-    def day(ds: str) -> DataFrame:
-        return bars_to_df(spark, fetch_bars(client, ds)).drop(
-            "insertion_timestamp"
-        )
-
-    snapshots.commit(
-        day(MOR_DATES[0]).unionAll(day(MOR_DATES[1])), table_dir, mode="overwrite"
-    )
-    snapshots.commit(day(MOR_DATES[2]), table_dir, mode="append")
+    snapshots.commit(_bars(spark, MOR_DATES[:2]), table_dir, mode="overwrite")
+    snapshots.commit(_bars(spark, MOR_DATES[2:3]), table_dir, mode="append")
     snapshots.delete_where(spark, table_dir, "volume % 2 = 1")
-    from .sources.tables import local_df
-
     snapshots.delete_matching(
         spark, table_dir, local_df(spark, [("AAPL",)], "ticker string"),
         ["ticker"],
     )
-    snapshots.commit(day(MOR_DATES[3]), table_dir, mode="append")
+    snapshots.commit(_bars(spark, MOR_DATES[3:]), table_dir, mode="append")
 
     pre = snapshots.read(spark, table_dir)
     snapshots.rewrite_data_files(spark, table_dir)
@@ -619,16 +606,11 @@ def snapshot_mor_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     # union is empty iff both exceptAlls are — same boolean, one job
     # instead of two
     compact_equal = pre.exceptAll(post).unionAll(post.exceptAll(pre)).isEmpty()
-    return (
-        post.groupBy("ticker")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("volume").alias("sum_volume"),
-            F.min("date").alias("min_date"),
-            F.max("date").alias("max_date"),
-        )
-        .withColumn("compact_equal", F.lit(compact_equal))
-        .orderBy("ticker")
+    return _per_ticker(
+        post,
+        F.min("date").alias("min_date"),
+        F.max("date").alias("max_date"),
+        compact_equal=compact_equal,
     )
 
 
@@ -669,26 +651,13 @@ def snapshot_metadata_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     deterministic from the script and the bar client, so the oracle
     regenerates all five rows closed-form.
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
-
-    def day(ds: str) -> DataFrame:
-        return bars_to_df(spark, fetch_bars(client, ds)).drop(
-            "insertion_timestamp"
-        )
-
-    snapshots.commit(day(EVOLUTION_DATES[0]), table_dir, mode="overwrite")
-    snapshots.commit(day(EVOLUTION_DATES[1]), table_dir, mode="append")
+    d1, d2, d3 = (_bars(spark, [ds]) for ds in EVOLUTION_DATES)
+    snapshots.commit(d1, table_dir, mode="overwrite")
+    snapshots.commit(d2, table_dir, mode="append")
     snapshots.delete_where(spark, table_dir, "volume % 2 = 1")
     snapshots.create_branch(table_dir, "audit")
-    snapshots.commit(
-        day(EVOLUTION_DATES[2]), table_dir, mode="append", branch="audit"
-    )
+    snapshots.commit(d3, table_dir, mode="append", branch="audit")
     snapshots.rewrite_data_files(spark, table_dir)
     return snapshots.snapshots_metadata(spark, table_dir).orderBy("snapshot_id")
 
@@ -748,19 +717,10 @@ def snapshot_pruned_scan_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     Surface: per-ticker day-2 aggregates + the planner evidence
     (dirs_scanned / dirs_skipped / prune_parity), all deterministic.
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
     for i, ds in enumerate(EVOLUTION_DATES):
-        day = bars_to_df(spark, fetch_bars(client, ds)).drop(
-            "insertion_timestamp"
-        )
         snapshots.commit(
-            day,
+            _bars(spark, [ds]),
             table_dir,
             mode="overwrite" if i == 0 else "append",
             stats_cols=["date"],
@@ -774,16 +734,8 @@ def snapshot_pruned_scan_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     full = snapshots.read(spark, table_dir).where(F.col("date") == d2)
     # one action for both multiset-diff directions (guide §1.2)
     parity = pruned.exceptAll(full).unionAll(full.exceptAll(pruned)).isEmpty()
-    return (
-        pruned.groupBy("ticker")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("volume").alias("sum_volume"),
-        )
-        .withColumn("dirs_scanned", F.lit(n_scan))
-        .withColumn("dirs_skipped", F.lit(n_skip))
-        .withColumn("prune_parity", F.lit(parity))
-        .orderBy("ticker")
+    return _per_ticker(
+        pruned, dirs_scanned=n_scan, dirs_skipped=n_skip, prune_parity=parity
     )
 
 
@@ -826,18 +778,11 @@ def snapshot_compaction_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     Surface: per-ticker aggregates over the compacted table + the
     maintenance evidence (dirs before/after, bin count, replan count).
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
     for ds in EVOLUTION_DATES:
-        day = bars_to_df(spark, fetch_bars(client, ds)).drop(
-            "insertion_timestamp"
+        snapshots.commit(
+            _bars(spark, [ds]), table_dir, mode="append", stats_cols=["date"]
         )
-        snapshots.commit(day, table_dir, mode="append", stats_cols=["date"])
     man = snapshots._load_manifest(table_dir)
     dirs_before = len(snapshots._head_snap(man, table_dir)["dirs"])
     plan = snapshots.compaction_plan(table_dir, target_bytes=1 << 30)
@@ -852,18 +797,12 @@ def snapshot_compaction_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     # for the intended reason (a target_bytes no dir can undershoot
     # would make this assert vacuous)
     replan = len(snapshots.compaction_plan(table_dir, target_bytes=1 << 30))
-    return (
-        snapshots.read(spark, table_dir)
-        .groupBy("ticker")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("volume").alias("sum_volume"),
-        )
-        .withColumn("dirs_before", F.lit(dirs_before))
-        .withColumn("dirs_after", F.lit(dirs_after))
-        .withColumn("n_bins", F.lit(n_bins))
-        .withColumn("replan_bins", F.lit(replan))
-        .orderBy("ticker")
+    return _per_ticker(
+        snapshots.read(spark, table_dir),
+        dirs_before=dirs_before,
+        dirs_after=dirs_after,
+        n_bins=n_bins,
+        replan_bins=replan,
     )
 
 
@@ -904,17 +843,8 @@ def snapshot_rollback_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     length — all deterministic) + ``bad_still_readable``, proof the
     rollback preserved the audit trail.
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
-    days = [
-        bars_to_df(spark, fetch_bars(client, ds)).drop("insertion_timestamp")
-        for ds in EVOLUTION_DATES
-    ]
+    days = [_bars(spark, [ds]) for ds in EVOLUTION_DATES]
     snapshots.commit(days[0], table_dir, mode="append")
     snapshots.commit(days[1], table_dir, mode="append")
     bad = days[2].withColumn("volume", F.col("volume") * 2)
@@ -935,24 +865,13 @@ def snapshot_rollback_demo(spark: SparkSession, table_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)), F.sum("volume"))
         .collect()[0]
     )
-    return (
-        snapshots.read(spark, table_dir)
-        .groupBy("ticker")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("volume").alias("sum_volume"),
-        )
-        .withColumn("bad_head", F.lit(bad_head))
-        .withColumn("rolled_back_to", F.lit(target))
-        .withColumn("final_head", F.lit(final_head))
-        .withColumn(
-            "n_history", F.lit(len(snapshots.history(table_dir)))
-        )
-        .withColumn(
-            "bad_still_readable",
-            F.lit(bool(bad_n == good_n and bad_vol > good_vol)),
-        )
-        .orderBy("ticker")
+    return _per_ticker(
+        snapshots.read(spark, table_dir),
+        bad_head=bad_head,
+        rolled_back_to=target,
+        final_head=final_head,
+        n_history=len(snapshots.history(table_dir)),
+        bad_still_readable=bool(bad_n == good_n and bad_vol > good_vol),
     )
 
 
@@ -1005,33 +924,14 @@ def snapshot_expire_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     expired-unreadable / retained-readable / orphans-deleted booleans
     — all deterministic).
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
-
-    def _bars(ds_list: list[str]) -> DataFrame:
-        dfs = [
-            bars_to_df(spark, fetch_bars(client, ds)).drop(
-                "insertion_timestamp"
-            )
-            for ds in ds_list
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
     heads = [
-        snapshots.commit(_bars(EXPIRE_DATES[:1]), table_dir, mode="append"),
-        snapshots.commit(_bars(EXPIRE_DATES[1:2]), table_dir, mode="append"),
+        snapshots.commit(_bars(spark, EXPIRE_DATES[:1]), table_dir, mode="append"),
+        snapshots.commit(_bars(spark, EXPIRE_DATES[1:2]), table_dir, mode="append"),
         # compacting rewrite of days 1-3: the retained history stops
         # referencing the two append dirs, making them expirable
-        snapshots.commit(_bars(EXPIRE_DATES[:3]), table_dir, mode="overwrite"),
-        snapshots.commit(_bars(EXPIRE_DATES[3:]), table_dir, mode="append"),
+        snapshots.commit(_bars(spark, EXPIRE_DATES[:3]), table_dir, mode="overwrite"),
+        snapshots.commit(_bars(spark, EXPIRE_DATES[3:]), table_dir, mode="append"),
     ]
     n_before = len(snapshots.history(table_dir))
     removed = snapshots.vacuum(table_dir, keep_last=2)
@@ -1047,20 +947,14 @@ def snapshot_expire_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     orphans_deleted = bool(removed) and all(
         not os.path.exists(os.path.join(table_dir, d)) for d in removed
     )
-    return (
-        snapshots.read(spark, table_dir)
-        .groupBy("ticker")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("volume").alias("sum_volume"),
-        )
-        .withColumn("n_history_before", F.lit(n_before))
-        .withColumn("n_history_after", F.lit(n_after))
-        .withColumn("n_dirs_removed", F.lit(len(removed)))
-        .withColumn("expired_unreadable", F.lit(expired_unreadable))
-        .withColumn("retained_readable", F.lit(retained_readable))
-        .withColumn("orphans_deleted", F.lit(orphans_deleted))
-        .orderBy("ticker")
+    return _per_ticker(
+        snapshots.read(spark, table_dir),
+        n_history_before=n_before,
+        n_history_after=n_after,
+        n_dirs_removed=len(removed),
+        expired_unreadable=expired_unreadable,
+        retained_readable=retained_readable,
+        orphans_deleted=orphans_deleted,
     )
 
 
@@ -1116,31 +1010,12 @@ def snapshot_partition_evolution_demo(
     Surface: per-ticker aggregates over the WHOLE evolved table + the
     planner evidence for both probes.
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
-
-    def _bars(dates: list[str]) -> DataFrame:
-        dfs = [
-            bars_to_df(spark, fetch_bars(client, ds)).drop(
-                "insertion_timestamp"
-            )
-            for ds in dates
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
     snapshots.commit_partitioned(
-        _bars(EVOLUTION_DATES), table_dir, "date", "day"
+        _bars(spark, EVOLUTION_DATES), table_dir, "date", "day"
     )
     snapshots.commit_partitioned(
-        _bars(PARTITION_EVOLUTION_MONTH_DATES), table_dir, "date", "month"
+        _bars(spark, PARTITION_EVOLUTION_MONTH_DATES), table_dir, "date", "month"
     )
 
     full = snapshots.read(spark, table_dir)
@@ -1163,18 +1038,13 @@ def snapshot_partition_evolution_demo(
         .unionAll(feb_flat.exceptAll(feb_pruned))
         .isEmpty()
     )
-    return (
-        full.groupBy("ticker")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("volume").alias("sum_volume"),
-        )
-        .withColumn("day_dirs_scanned", F.lit(jan_scan))
-        .withColumn("day_dirs_skipped", F.lit(jan_skip))
-        .withColumn("month_dirs_scanned", F.lit(feb_scan))
-        .withColumn("month_dirs_skipped", F.lit(feb_skip))
-        .withColumn("prune_parity", F.lit(parity))
-        .orderBy("ticker")
+    return _per_ticker(
+        full,
+        day_dirs_scanned=jan_scan,
+        day_dirs_skipped=jan_skip,
+        month_dirs_scanned=feb_scan,
+        month_dirs_skipped=feb_skip,
+        prune_parity=parity,
     )
 
 
@@ -1292,20 +1162,11 @@ def snapshot_incremental_demo(spark: SparkSession, table_dir: str) -> DataFrame:
     Surface: (ticker, n_commits, n_days, total_volume, total_close_cents)
     — all exact integers.
     """
-    import shutil
-
-    from .sources import snapshots
-    from .sources.stock_api import DeterministicBarClient, bars_to_df, fetch_bars
-
     shutil.rmtree(table_dir, ignore_errors=True)
-    client = DeterministicBarClient()
     total: DataFrame | None = None
     prev_v = 0
     for ds in EVOLUTION_DATES:
-        df = bars_to_df(spark, fetch_bars(client, ds)).drop(
-            "insertion_timestamp"
-        )
-        v = snapshots.commit(df, table_dir, mode="append")
+        v = snapshots.commit(_bars(spark, [ds]), table_dir, mode="append")
         delta = snapshots.read_incremental(
             spark, table_dir, after_version=prev_v
         )

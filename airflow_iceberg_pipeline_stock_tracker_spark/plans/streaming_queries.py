@@ -321,6 +321,45 @@ GROUP BY 1
 """
 
 
+def _parity_summary(
+    batch: DataFrame, stream: DataFrame, keys: list[str]
+) -> tuple[int, int, int, str, str]:
+    """(n_only_batch, n_only_stream, n_rows, keys_only_batch,
+    keys_only_stream) of a batch/stream parity diff.
+
+    The diff is the full-column multiset ``exceptAll`` both ways; n_rows
+    counts ``batch``. Self-diagnosing: on divergence the key strings
+    name the first 20 sorted distinct ``keys`` tuples unique to each
+    side, so a red driver row localizes itself instead of just reporting
+    a hash mismatch; they are empty on parity (the oracle row).
+
+    ONE tagged action funds all five cells (guide §1.2), and it counts
+    on the executors: the driver receives one row, not the batch
+    relation, whose size grows with the data."""
+    tagged = (
+        batch.exceptAll(stream).select(F.lit("batch").alias("side"), *keys)
+        .unionAll(stream.exceptAll(batch).select(F.lit("stream").alias("side"), *keys))
+        .unionAll(batch.select(F.lit("rows").alias("side"), *keys))
+    )
+    key = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
+
+    def count(side: str):
+        return F.count(F.when(F.col("side") == side, 1))
+
+    def first_keys(side: str):
+        diff = F.collect_set(F.when(F.col("side") == side, key))
+        return F.concat_ws(",", F.slice(F.array_sort(diff), 1, 20))
+
+    row = tagged.agg(
+        count("batch"),
+        count("stream"),
+        count("rows"),
+        first_keys("batch"),
+        first_keys("stream"),
+    ).collect()[0]
+    return tuple(row)
+
+
 def pipeline_micro_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the SAME 3-day backfill via the batch driver and via the
     foreachBatch streaming pipeline, then diff the two cumulative tables.
@@ -364,59 +403,9 @@ def pipeline_micro_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         side: spark.table(f"{db}.{pipeline.CUMULATIVE_TABLE}").drop("updated_at")
         for side, db in dbs.items()
     }
-    only = {
-        "batch": cum["batch"].exceptAll(cum["stream"]),
-        "stream": cum["stream"].exceptAll(cum["batch"]),
-    }
-
-    # Self-diagnosing: on divergence, name the (ticker, date) keys unique
-    # to each side so a red driver row localizes itself instead of just
-    # reporting a hash mismatch. Empty string on parity (the oracle row).
-    #
-    # ONE tagged action funds all five output cells (guide §1.2): the
-    # r16 shape evaluated each exceptAll twice (a count job + a keys
-    # job per side) plus a count job on the batch table — five jobs over
-    # 15-row relations. The full-column exceptAll diff is unchanged;
-    # only its consumption is fused. Key naming is now deterministic
-    # (sorted distinct keys, first 20) instead of limit(20)-then-sort —
-    # diagnostic-only: the oracle row has zero diff rows either way.
-    tagged = (
-        only["batch"]
-        .select(F.lit("batch").alias("side"), "ticker", "date")
-        .unionAll(
-            only["stream"].select(F.lit("stream").alias("side"), "ticker", "date")
-        )
-        .unionAll(
-            cum["batch"].select(F.lit("rows").alias("side"), "ticker", "date")
-        )
-        .collect()
-    )
-
-    def _n(side: str) -> int:
-        return sum(1 for r in tagged if r["side"] == side)
-
-    def _keys(side: str) -> str:
-        return ",".join(
-            sorted(
-                {
-                    f"{r['ticker']}|{r['date']}"
-                    for r in tagged
-                    if r["side"] == side
-                }
-            )[:20]
-        )
-
     return local_df(
         spark,
-        [
-            (
-                _n("batch"),
-                _n("stream"),
-                _n("rows"),
-                _keys("batch"),
-                _keys("stream"),
-            )
-        ],
+        [_parity_summary(cum["batch"], cum["stream"], ["ticker", "date"])],
         "n_only_batch bigint, n_only_stream bigint, n_rows bigint, "
         "keys_only_batch string, keys_only_stream string",
     )
@@ -857,53 +846,9 @@ def events_micro_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     batch = windows.hourly_tumbling(load_table(spark, sf_dir, "events"))
     stream = _drain(windows.hourly_tumbling(_events_stream(spark, sf_dir)))
-    only = {
-        "batch": batch.exceptAll(stream),
-        "stream": stream.exceptAll(batch),
-    }
-
-    # ONE tagged action funds all five cells (same fusion as
-    # pipeline_micro_batch_parity, guide §1.2) — the r16 shape re-ran
-    # the batch-side aggregation for every one of five actions (two
-    # counts + two key collects + the row count). The exceptAll diff is
-    # unchanged; key naming is deterministic (sorted, first 20).
-    tagged = (
-        only["batch"]
-        .select(F.lit("batch").alias("side"), "hour", "event_type")
-        .unionAll(
-            only["stream"].select(F.lit("stream").alias("side"), "hour", "event_type")
-        )
-        .unionAll(
-            batch.select(F.lit("rows").alias("side"), "hour", "event_type")
-        )
-        .collect()
-    )
-
-    def _n(side: str) -> int:
-        return sum(1 for r in tagged if r["side"] == side)
-
-    def _keys(side: str) -> str:
-        return ",".join(
-            sorted(
-                {
-                    f"{r['hour']}|{r['event_type']}"
-                    for r in tagged
-                    if r["side"] == side
-                }
-            )[:20]
-        )
-
     return local_df(
         spark,
-        [
-            (
-                _n("batch"),
-                _n("stream"),
-                _n("rows"),
-                _keys("batch"),
-                _keys("stream"),
-            )
-        ],
+        [_parity_summary(batch, stream, ["hour", "event_type"])],
         "n_only_batch bigint, n_only_stream bigint, n_rows bigint, "
         "keys_only_batch string, keys_only_stream string",
     )
@@ -948,26 +893,16 @@ def events_snapshot_sink_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap_read = snapshots.read(spark, table_dir)
     batch = windows.hourly_tumbling(load_table(spark, sf_dir, "events"))
     streamed = windows.hourly_tumbling(snap_read)
-    # ONE tagged action funds all three counts (guide §1.2; same fusion
-    # as the two micro-batch parity rows — the r16 shape re-ran the
-    # batch aggregation for each of three actions)
-    tagged = (
-        batch.exceptAll(streamed)
-        .select(F.lit("batch").alias("side"))
-        .unionAll(streamed.exceptAll(batch).select(F.lit("stream").alias("side")))
-        .unionAll(batch.select(F.lit("rows").alias("side")))
-        .collect()
+    n_only_batch, n_only_stream, n_rows, _, _ = _parity_summary(
+        batch, streamed, ["hour", "event_type"]
     )
-    n_by_side = {"batch": 0, "stream": 0, "rows": 0}
-    for r in tagged:
-        n_by_side[r["side"]] += 1
     return local_df(
         spark,
         [
             (
-                n_by_side["batch"],
-                n_by_side["stream"],
-                n_by_side["rows"],
+                n_only_batch,
+                n_only_stream,
+                n_rows,
                 bool(n_commits >= 1),
                 bool(replay_added),
             )
@@ -1012,7 +947,7 @@ STREAMING_QUERIES: dict[str, tuple] = {
     "streaming_merge_apply": (streaming_merge_apply, MERGE_APPLY_SQL),
     "pipeline_micro_batch_parity": (pipeline_micro_batch_parity, PIPELINE_PARITY_SQL),
     "events_micro_batch_parity": (events_micro_batch_parity, EVENTS_PARITY_SQL),
-    # exactly-once through the CAS snapshot layer (new r7): tagged
+    # exactly-once through the CAS snapshot layer (new r7): txn
     # commits + replay no-op + batch parity in one hashed row
     "events_snapshot_sink_parity": (
         events_snapshot_sink_parity,

@@ -3049,12 +3049,19 @@ def events_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector (retrospective 'when did the level shift' vs online
     'alert me when it drifts').
 
-    Determinism: S, Q, and every prefix sum are exact int64 window
-    sums; each candidate's gain is a fixed expression over those ints
-    (three IEEE divisions, no order-dependent float summation), so
-    gains are bit-equal across engines and the argmax (ties broken by
-    earliest date) cannot flip. split_d is the LAST day of the left
-    segment.
+    Determinism: S and every prefix sum are exact int64 window sums,
+    and the gain is evaluated in its closed form
+
+      gain(t) = (S_L*(n-t) - S_R*t)^2 / (n*t*(n-t))
+
+    whose numerator root and denominator are exact int64 products, so
+    the double is ONE correctly rounded quotient (exact operands while
+    |S_L*(n-t) - S_R*t| < 2^26.5). Candidates with mathematically equal
+    gains therefore get bit-equal doubles and the argmax tie-break by
+    earliest date holds; the three-term SSE difference rounds each term
+    separately and can order a true tie either way (e.g. daily counts
+    [4, 1, 5, 2]: t=1 and t=3 both gain 4/3). split_d is the LAST day
+    of the left segment.
 
     Scale: events collapse to |dates| x |types| rows map-side; the
     candidate scan is one pass over that dimension-bounded series per
@@ -3073,24 +3080,18 @@ def changepoint_df(ev: DataFrame) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("d")
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.partitionBy("event_type")
-    yy = F.col("y") * F.col("y")
     cum = (
         daily.withColumn("i", F.row_number().over(w).cast("bigint"))
         .withColumn("s", F.sum("y").over(wcum))
-        .withColumn("q", F.sum(yy).over(wcum))
         .withColumn("n", F.count(F.lit(1)).over(wall).cast("bigint"))
         .withColumn("st", F.sum("y").over(wall))
-        .withColumn("qt", F.sum(yy).over(wall))
     )
     d = lambda c: F.col(c).cast("double")  # noqa: E731
-    sse_total = d("qt") - d("st") * d("st") / d("n")
-    sse_left = d("q") - d("s") * d("s") / d("i")
-    sse_right = (d("qt") - d("q")) - (d("st") - d("s")) * (
-        d("st") - d("s")
-    ) / (d("n") - d("i"))
+    i, n, s, st = (F.col(c) for c in ("i", "n", "s", "st"))
+    root = (s * (n - i) - (st - s) * i).cast("double")
     cand = (
-        cum.where((F.col("i") >= 1) & (F.col("i") < F.col("n")))
-        .withColumn("gain", sse_total - sse_left - sse_right)
+        cum.where((i >= 1) & (i < n))
+        .withColumn("gain", root * root / (n * i * (n - i)).cast("double"))
         .withColumn("mean_before", d("s") / d("i"))
         .withColumn(
             "mean_after", (d("st") - d("s")) / (d("n") - d("i"))
@@ -3121,10 +3122,8 @@ WITH daily AS (
   SELECT event_type, d, y,
          CAST(ROW_NUMBER() OVER w AS BIGINT) AS i,
          SUM(y) OVER wc AS s,
-         SUM(y * y) OVER wc AS q,
          CAST(COUNT(*) OVER wa AS BIGINT) AS n,
-         SUM(y) OVER wa AS st,
-         SUM(y * y) OVER wa AS qt
+         SUM(y) OVER wa AS st
   FROM daily
   WINDOW w AS (PARTITION BY event_type ORDER BY d),
          wc AS (PARTITION BY event_type ORDER BY d
@@ -3132,14 +3131,9 @@ WITH daily AS (
          wa AS (PARTITION BY event_type)
 ), cand AS (
   SELECT event_type, d, i, n,
-         (CAST(qt AS DOUBLE) - CAST(st AS DOUBLE) * CAST(st AS DOUBLE)
-            / CAST(n AS DOUBLE))
-         - (CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-              / CAST(i AS DOUBLE))
-         - ((CAST(qt AS DOUBLE) - CAST(q AS DOUBLE))
-            - (CAST(st AS DOUBLE) - CAST(s AS DOUBLE))
-              * (CAST(st AS DOUBLE) - CAST(s AS DOUBLE))
-              / (CAST(n AS DOUBLE) - CAST(i AS DOUBLE))) AS gain,
+         CAST(s * (n - i) - (st - s) * i AS DOUBLE)
+           * CAST(s * (n - i) - (st - s) * i AS DOUBLE)
+           / CAST(n * i * (n - i) AS DOUBLE) AS gain,
          CAST(s AS DOUBLE) / CAST(i AS DOUBLE) AS mean_before,
          (CAST(st AS DOUBLE) - CAST(s AS DOUBLE))
            / (CAST(n AS DOUBLE) - CAST(i AS DOUBLE)) AS mean_after

@@ -53,6 +53,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -60,8 +61,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_PREFIX = "_manifest-"
-# legacy alias kept for external readers of the module surface
-MANIFEST = MANIFEST_PREFIX
+# attempts at one manifest version claim before a mutation gives up
+CAS_RETRIES = 16
 
 
 def _manifest_versions(table_dir: str) -> list[int]:
@@ -83,18 +84,7 @@ def _manifest_path(table_dir: str, seq: int) -> str:
     return os.path.join(table_dir, f"{MANIFEST_PREFIX}{seq:06d}.json")
 
 
-_EMPTY_MANIFEST: dict = {
-    "seq": 0,
-    "current": 0,
-    "snapshots": [],
-    "tags": {},
-    "txns": {},
-    "refs": {},
-    "dir_seq": {},
-}
-
-
-def _load_manifest(table_dir: str, max_retries: int = 10) -> dict:
+def _load_manifest(table_dir: str) -> dict:
     """Resolve the highest committed manifest version (or the empty
     table state). A partially-created manifest can never be observed:
     versions appear only via ``os.link`` of a fully-written temp.
@@ -104,33 +94,25 @@ def _load_manifest(table_dir: str, max_retries: int = 10) -> dict:
     FileNotFoundError here means a NEWER version already exists —
     re-list and resolve that one instead of crashing (r8 advice fix;
     covered by the cross-process vacuum-vs-commit race test)."""
-    for _ in range(max_retries):
+    for _ in range(CAS_RETRIES):
         versions = _manifest_versions(table_dir)
         if not versions:
-            # every mutable member overridden fresh — returning any
-            # container aliased to _EMPTY_MANIFEST would let an in-place
-            # caller mutation corrupt the module-level template for
-            # every table (r9 advice: refs was the one member missed)
-            return dict(
-                _EMPTY_MANIFEST,
-                snapshots=[],
-                tags={},
-                txns={},
-                refs={},
-                dir_seq={},
-            )
+            # a fresh literal per call: callers may mutate what they get
+            return {
+                "seq": 0,
+                "current": 0,
+                "snapshots": [],
+                "txns": {},
+                "refs": {},
+                "dir_seq": {},
+            }
         try:
             with open(_manifest_path(table_dir, versions[-1])) as f:
-                man = json.load(f)
+                return json.load(f)
         except FileNotFoundError:
             continue  # pruned between list and open — a newer one exists
-        man.setdefault("tags", {})
-        man.setdefault("txns", {})
-        man.setdefault("refs", {})
-        man.setdefault("dir_seq", {})
-        return man
     raise RuntimeError(
-        f"manifest resolution raced vacuum {max_retries} times in {table_dir}"
+        f"manifest resolution raced vacuum {CAS_RETRIES} times in {table_dir}"
     )
 
 
@@ -158,12 +140,56 @@ def _publish_manifest(table_dir: str, manifest: dict) -> bool:
         os.unlink(tmp)
 
 
+def _transact(table_dir: str, step):
+    """The one manifest compare-and-swap loop every mutation runs.
+
+    ``step(man)`` sees the latest committed manifest and returns
+    ``(changes, result)``: the loop publishes ``man`` with ``changes``
+    applied as version ``seq + 1`` (snapshot log carried) and returns
+    ``result``. ``(None, result)`` is a no-op that publishes nothing;
+    an exception from ``step`` refuses the mutation. A writer that
+    loses the version claim backs off briefly, re-reads the winner's
+    manifest and runs ``step`` again on it — the rebase that keeps every
+    committed snapshot (optimistic concurrency, as Iceberg). Members
+    ``changes`` does not name (txns, refs, dir_seq, stats, ...) carry
+    over verbatim."""
+    for attempt in range(CAS_RETRIES):
+        man = _load_manifest(table_dir)
+        changes, result = step(man)
+        if changes is None:
+            return result
+        new_man = _carry_log(man, dict(man, seq=man["seq"] + 1, **changes))
+        if _publish_manifest(table_dir, new_man):
+            return result
+        time.sleep(0.001 * (attempt + 1))
+    raise RuntimeError(
+        f"lost the manifest CAS {CAS_RETRIES} times in {table_dir}"
+    )
+
+
+def _snap(man: dict, version: int) -> dict:
+    """The snapshot entry with id ``version``."""
+    for snap in man["snapshots"]:
+        if snap["id"] == version:
+            return snap
+    raise ValueError(
+        f"snapshot {version} not in history "
+        f"(have {[s['id'] for s in man['snapshots']]})"
+    )
+
+
+def _committed(table_dir: str) -> dict:
+    """The manifest of a table that has at least one snapshot."""
+    man = _load_manifest(table_dir)
+    if not man["snapshots"]:
+        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    return man
+
+
 def commit(
     df: DataFrame,
     table_dir: str,
     mode: str = "append",
-    max_retries: int = 16,
-    tag: str | None = None,
     txn: tuple[str, int] | None = None,
     branch: str | None = None,
     stats_cols: list[str] | None = None,
@@ -185,22 +211,19 @@ def commit(
     whose str() does not order, e.g. negative-exponent decimals, should
     not be stats columns).
 
-    ``tag`` makes the commit IDEMPOTENT per tag: if any snapshot in the
-    manifest already carries it, the commit is a no-op returning that
-    snapshot's id. This is the exactly-once contract a replayed
-    streaming micro-batch needs (tag = the batch id): re-delivery after
-    a sink crash cannot double-append, because the tag check happens
-    inside the same CAS loop that publishes the manifest.
-
-    ``txn=(app_id, version)`` is the SCALABLE form of the same contract
-    (Delta Lake's txnAppId/txnVersion): the manifest stores ONE
-    monotonic high-water version per app_id, and any commit with
-    ``version <= stored`` is a replay no-op (returns the then-current
-    snapshot id). A long-running stream's manifest stays O(runs), not
-    O(micro-batches) — the per-batch string-tag map grows one entry per
-    batch forever and every commit rewrites it (r8 advice). Requires the
-    producer to deliver versions monotonically per app_id, which is
-    exactly Structured Streaming's batch-id contract per checkpoint.
+    ``txn=(app_id, version)`` makes the commit IDEMPOTENT (Delta Lake's
+    txnAppId/txnVersion): the manifest stores ONE monotonic high-water
+    version per app_id, and any commit with ``version <= stored`` is a
+    replay no-op (returns the then-current snapshot id). This is the
+    exactly-once contract a replayed streaming micro-batch needs
+    (version = the batch id): re-delivery after a sink crash cannot
+    double-append, because the txn check happens inside the same CAS
+    loop that publishes the manifest. A long-running stream's manifest
+    stays O(runs), not O(micro-batches) — a per-batch key map would grow
+    one entry per batch forever and every commit would rewrite it (r8
+    advice). Requires the producer to deliver versions monotonically per
+    app_id, which is exactly Structured Streaming's batch-id contract
+    per checkpoint.
 
     The data write happens entirely BEFORE the manifest publish — a
     crash anywhere in between leaves the table at the previous snapshot
@@ -212,8 +235,7 @@ def commit(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown commit mode: {mode}")
     os.makedirs(table_dir, exist_ok=True)
-    man = _load_manifest(table_dir)
-    already = _replayed(man, tag, txn)
+    already = _txn_replayed(_load_manifest(table_dir), txn)
     if already is not None:  # replay detected before any work
         return already
     # unique data directory: a crashed or racing writer can never block
@@ -221,9 +243,7 @@ def commit(
     snap_dir = f"snap-{uuid.uuid4().hex[:12]}"
     stats = _column_stats(df, stats_cols) if stats_cols else None
     df.write.mode("errorifexists").parquet(os.path.join(table_dir, snap_dir))
-    return _commit_entry(
-        table_dir, snap_dir, mode, max_retries, tag, txn, branch, stats
-    )
+    return _commit_entry(table_dir, snap_dir, mode, txn, branch, stats)
 
 
 def commit_partitioned(
@@ -232,8 +252,6 @@ def commit_partitioned(
     col: str,
     transform: str,
     mode: str = "append",
-    max_retries: int = 16,
-    tag: str | None = None,
     txn: tuple[str, int] | None = None,
     branch: str | None = None,
 ) -> int:
@@ -277,8 +295,7 @@ def commit_partitioned(
     if "_sg_part" in df.columns:
         raise ValueError("df already has a _sg_part column")
     os.makedirs(table_dir, exist_ok=True)
-    man = _load_manifest(table_dir)
-    already = _replayed(man, tag, txn)
+    already = _txn_replayed(_load_manifest(table_dir), txn)
     if already is not None:
         return already
     root = f"snap-{uuid.uuid4().hex[:12]}"
@@ -321,8 +338,6 @@ def commit_partitioned(
         table_dir,
         dirs,
         mode,
-        max_retries,
-        tag,
         txn,
         branch,
         stats or None,
@@ -350,45 +365,21 @@ def _column_stats(df: DataFrame, cols: list[str]) -> dict:
     }
 
 
-def _tagged(man: dict, tag: str | None) -> int | None:
-    """Snapshot id a tag already committed, else None. Tags live in a
-    top-level manifest map that ``vacuum`` carries forward verbatim, so
-    a micro-batch replayed after retention trimmed its snapshot entry is
-    STILL recognized as a no-op (r8 advice fix) — the per-snapshot
-    ``tag`` field remains for history introspection only."""
-    if tag is None:
-        return None
-    hit = man.get("tags", {}).get(tag)
-    if hit is not None:
-        return hit
-    for s in man["snapshots"]:  # manifests written before the tags map
-        if s.get("tag") == tag:
-            return s["id"]
-    return None
-
-
 def _txn_replayed(man: dict, txn: tuple[str, int] | None) -> int | None:
     """Current snapshot id if ``txn`` is at-or-below its app's committed
     high-water version (Delta's txnAppId/txnVersion replay rule), else
-    None. Unlike string tags this cannot name the ORIGINAL snapshot a
-    replay first landed in — exactly-once needs only "don't apply
-    twice", and forgetting per-batch ids is what keeps the manifest
-    O(runs)."""
+    None. The txns map lives at the top of the manifest and ``vacuum``
+    carries it forward verbatim, so a micro-batch replayed after
+    retention trimmed its snapshot entry is STILL a no-op (r8 advice
+    fix). It cannot name the ORIGINAL snapshot a replay first landed in
+    — exactly-once needs only "don't apply twice", and forgetting
+    per-batch ids is what keeps the manifest O(runs)."""
     if txn is None:
         return None
     app_id, version = txn
-    if man.get("txns", {}).get(app_id, -1) >= version:
+    if man["txns"].get(app_id, -1) >= version:
         return man["current"]
     return None
-
-
-def _replayed(
-    man: dict, tag: str | None, txn: tuple[str, int] | None
-) -> int | None:
-    hit = _tagged(man, tag)
-    if hit is not None:
-        return hit
-    return _txn_replayed(man, txn)
 
 
 def _max_id(man: dict) -> int:
@@ -433,27 +424,6 @@ def _resolve_as_of(man: dict, as_of) -> int:
     return eligible[-1]["id"]
 
 
-def _dirs_of(man: dict, version: int) -> list[str]:
-    for snap in man["snapshots"]:
-        if snap["id"] == version:
-            return snap["dirs"]
-    raise ValueError(
-        f"snapshot {version} not in history "
-        f"(have {[s['id'] for s in man['snapshots']]})"
-    )
-
-
-def _deletes_of(man: dict, version: int) -> list[dict]:
-    """Merge-on-read delete-file entries of a snapshot (possibly [])."""
-    for snap in man["snapshots"]:
-        if snap["id"] == version:
-            return snap.get("deletes", [])
-    raise ValueError(
-        f"snapshot {version} not in history "
-        f"(have {[s['id'] for s in man['snapshots']]})"
-    )
-
-
 def _head_snap(man: dict, table_dir: str) -> dict:
     """The snapshot entry ``current`` points at, with a meaningful
     error when the table has history but no MAIN head — possible when
@@ -467,22 +437,20 @@ def _head_snap(man: dict, table_dir: str) -> dict:
             f"{len(man['snapshots'])} commits are branch-staged) — "
             "fast_forward a branch to main first"
         )
-    return next(s for s in man["snapshots"] if s["id"] == cur)
+    return _snap(man, cur)
 
 
 def _commit_entry(
     table_dir: str,
     snap_dir: str | list[str],
     mode: str = "append",
-    max_retries: int = 16,
-    tag: str | None = None,
     txn: tuple[str, int] | None = None,
     branch: str | None = None,
     stats: dict | None = None,
     spec: dict | None = None,
 ) -> int:
-    """The manifest CAS loop — everything in ``commit`` after the data
-    write. Factored out so the cross-process concurrency tests drive the
+    """Everything in ``commit`` after the data write: one ``_transact``
+    step. Factored out so the cross-process concurrency tests drive the
     EXACT production arbitration path (rebase-and-retry over
     ``_publish_manifest``) without paying a Spark session per process.
 
@@ -495,12 +463,13 @@ def _commit_entry(
     (Iceberg's hidden-partitioning principle: scan planning reads
     per-file stats, not the spec that produced them)."""
     new_dirs = [snap_dir] if isinstance(snap_dir, str) else list(snap_dir)
-    multi = not isinstance(snap_dir, str)
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
-        already = _replayed(man, tag, txn)
+    if stats is not None and isinstance(snap_dir, str):
+        stats = {snap_dir: stats}
+
+    def step(man: dict):
+        already = _txn_replayed(man, txn)
         if already is not None:  # a racing replay won the CAS first
-            return already
+            return None, already
         if branch is not None and branch not in man["refs"]:
             raise ValueError(
                 f"branch {branch!r} does not exist in {table_dir} "
@@ -509,66 +478,42 @@ def _commit_entry(
         # ids are allocated off the global high-water, NOT off the main
         # head: a branch commit must never collide with a later main id
         snap_id = _max_id(man) + 1
-        prev_dirs: list[str] = []
-        prev_dels: list[dict] = []
-        if mode == "append":
-            head = man["refs"][branch] if branch is not None else man["current"]
-            prev_dirs = list(_dirs_of(man, head)) if head else []
+        entry = {"id": snap_id, "dirs": new_dirs, "op": mode}
+        head = man["refs"][branch] if branch is not None else man["current"]
+        if mode == "append" and head:
+            base = _snap(man, head)
+            entry["dirs"] = base["dirs"] + new_dirs
             # an append INHERITS the head's merge-on-read delete files —
             # the new data dir gets a HIGHER dir_seq than any existing
             # equality delete, so inherited eq deletes can never touch it
-            prev_dels = list(_deletes_of(man, head)) if head else []
-        entry = {"id": snap_id, "dirs": prev_dirs + new_dirs, "op": mode}
+            if base.get("deletes"):
+                entry["deletes"] = base["deletes"]
         if spec is not None:
             entry["spec"] = spec
-        if prev_dels:
-            entry["deletes"] = prev_dels
-        if branch is not None:
-            entry["branch"] = branch
-        if tag is not None:
-            entry["tag"] = tag
-        if txn is not None:
-            # history introspection only (Delta's setTransaction action);
-            # replay detection reads the O(runs) txns map, never this
-            entry["txn"] = [txn[0], txn[1]]
-        txns = man.get("txns", {})
-        if txn is not None:
-            app_id, version = txn
-            txns = dict(txns, **{app_id: max(version, txns.get(app_id, -1))})
-        refs = dict(man["refs"])
-        if branch is not None:
-            refs[branch] = snap_id
-        new_man = {
-            "seq": man["seq"] + 1,
-            "current": man["current"] if branch is not None else snap_id,
+        changes = {
             "snapshots": man["snapshots"] + [entry],
-            "tags": dict(man.get("tags", {}), **({tag: snap_id} if tag else {})),
-            "txns": txns,
-            "refs": refs,
             # dir -> snapshot id that ADDED it: the sequence numbers that
             # scope equality deletes (a dir missing from the map reads as
             # seq 0, i.e. pre-delete data — the conservative legacy rule)
-            "dir_seq": dict(
-                man.get("dir_seq", {}), **{d: snap_id for d in new_dirs}
-            ),
+            "dir_seq": dict(man["dir_seq"], **{d: snap_id for d in new_dirs}),
         }
-        # dir -> {col: [min, max]}: scan-planning column stats; a dir
-        # absent from the map is always scanned (conservative)
-        dir_stats = man.get("dir_stats", {})
+        if branch is None:
+            changes["current"] = snap_id
+        else:
+            entry["branch"] = branch
+            changes["refs"] = dict(man["refs"], **{branch: snap_id})
+        if txn is not None:
+            # history introspection only (Delta's setTransaction action);
+            # replay detection reads the O(runs) txns map, never this
+            entry["txn"] = list(txn)
+            changes["txns"] = dict(man["txns"], **{txn[0]: txn[1]})
         if stats is not None:
-            dir_stats = dict(
-                dir_stats, **(stats if multi else {snap_dir: stats})
-            )
-        if dir_stats:
-            new_man["dir_stats"] = dir_stats
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            return snap_id
-        # lost the CAS — back off briefly and rebase on the winner
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(
-        f"commit lost the manifest CAS {max_retries} times in {table_dir}"
-    )
+            # dir -> {col: [min, max]}: scan-planning column stats; a dir
+            # absent from the map is always scanned (conservative)
+            changes["dir_stats"] = dict(man.get("dir_stats", {}), **stats)
+        return changes, snap_id
+
+    return _transact(table_dir, step)
 
 
 def read(
@@ -593,26 +538,22 @@ def read(
     """
     if sum(x is not None for x in (version, ref, as_of)) > 1:
         raise ValueError("pass at most one of version / ref / as_of")
-    man = _load_manifest(table_dir)
-    if not man["snapshots"]:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    man = _committed(table_dir)
     if as_of is not None:
         version = _resolve_as_of(man, as_of)
     if ref is not None:
-        if ref not in man["refs"]:
-            raise ValueError(
-                f"no ref {ref!r} in {table_dir} (have {sorted(man['refs'])})"
-            )
-        version = man["refs"][ref]
+        version = _ref_head(man, table_dir, ref)
     if version is None:
         version = man["current"]
-    for snap in man["snapshots"]:
-        if snap["id"] == version:
-            return _plan_snapshot(spark, table_dir, man, snap)
-    raise ValueError(
-        f"snapshot {version} not in history "
-        f"(have {[s['id'] for s in man['snapshots']]})"
-    )
+    return _plan_snapshot(spark, table_dir, man, _snap(man, version))
+
+
+def _ref_head(man: dict, table_dir: str, ref: str) -> int:
+    if ref not in man["refs"]:
+        raise ValueError(
+            f"no ref {ref!r} in {table_dir} (have {sorted(man['refs'])})"
+        )
+    return man["refs"][ref]
 
 
 def read_pruned(
@@ -640,17 +581,13 @@ def read_pruned(
     """
     if lo is None and hi is None:
         raise ValueError("read_pruned needs at least one bound")
-    man = _load_manifest(table_dir)
-    if not man["snapshots"]:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    man = _committed(table_dir)
     if ref is not None:
-        version = man["refs"].get(ref)
-        if version is None:
-            raise ValueError(f"no ref {ref!r} in {table_dir}")
+        version = _ref_head(man, table_dir, ref)
     if version is None:
         snap = _head_snap(man, table_dir)
     else:
-        snap = next(s for s in man["snapshots"] if s["id"] == version)
+        snap = _snap(man, version)
     stats = man.get("dir_stats", {})
     q_lo, q_hi = _stat_val(lo), _stat_val(hi)
     scanned: list[str] = []
@@ -777,12 +714,7 @@ class CommitConflict(RuntimeError):
     (Iceberg's validation failure on conflicting concurrent writes)."""
 
 
-def delete_where(
-    spark: SparkSession,
-    table_dir: str,
-    predicate: str,
-    max_retries: int = 16,
-) -> int:
+def delete_where(spark: SparkSession, table_dir: str, predicate: str) -> int:
     """Row-level DELETE as a merge-on-read POSITIONAL delete file
     (Iceberg v2 position deletes) — no data file is rewritten.
 
@@ -806,11 +738,8 @@ def delete_where(
     snapshot still shows the rows; ``vacuum`` keeps every delete file a
     retained snapshot references.
     """
-    man = _load_manifest(table_dir)
-    if not man["snapshots"]:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    man = _committed(table_dir)
     snap = _head_snap(man, table_dir)
-    cur_id = snap["id"]
     matched = (
         _plan_snapshot(spark, table_dir, man, snap, with_position=True)
         .where(F.expr(predicate))
@@ -831,21 +760,15 @@ def delete_where(
         for r in back.select(_rel_dir_of("_del_file")).distinct().collect()
     }
     if not ref_dirs:
-        import shutil
-
         shutil.rmtree(del_path, ignore_errors=True)
-        return cur_id
+        return snap["id"]
     return _delete_commit_entry(
-        table_dir, {"dir": del_dir, "kind": "pos"}, ref_dirs, max_retries
+        table_dir, {"dir": del_dir, "kind": "pos"}, ref_dirs
     )
 
 
 def delete_matching(
-    spark: SparkSession,
-    table_dir: str,
-    keys: DataFrame,
-    cols: list[str],
-    max_retries: int = 16,
+    spark: SparkSession, table_dir: str, keys: DataFrame, cols: list[str]
 ) -> int:
     """Row-level DELETE as a merge-on-read EQUALITY delete file
     (Iceberg v2 equality deletes — the CDC-writer primitive).
@@ -864,30 +787,20 @@ def delete_matching(
     gets the lower sequence number, and the delete applies only below
     its own.
     """
-    man = _load_manifest(table_dir)
-    if not man["snapshots"]:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    man = _committed(table_dir)
     del_dir = f"del-{uuid.uuid4().hex[:12]}"
     del_path = os.path.join(table_dir, del_dir)
     keys.select(*cols).distinct().write.mode("errorifexists").parquet(del_path)
     if spark.read.parquet(del_path).isEmpty():
-        import shutil
-
         shutil.rmtree(del_path, ignore_errors=True)
         return man["current"]
     return _delete_commit_entry(
-        table_dir,
-        {"dir": del_dir, "kind": "eq", "cols": list(cols)},
-        None,
-        max_retries,
+        table_dir, {"dir": del_dir, "kind": "eq", "cols": list(cols)}, None
     )
 
 
 def _delete_commit_entry(
-    table_dir: str,
-    delete: dict,
-    ref_dirs: set[str] | None,
-    max_retries: int = 16,
+    table_dir: str, delete: dict, ref_dirs: set[str] | None
 ) -> int:
     """CAS-publish a delete-file commit: same dirs as the head, the new
     delete appended to the head's delete list. ``ref_dirs`` (positional
@@ -896,13 +809,13 @@ def _delete_commit_entry(
     concurrent overwrite removed. Equality deletes capture their
     sequence number HERE (the allocated snapshot id), so scoping stays
     correct however many writers raced in between."""
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
+
+    def step(man: dict):
         head = man["current"]
-        head_dirs = list(_dirs_of(man, head)) if head else []
-        if ref_dirs is not None and not ref_dirs <= set(head_dirs):
+        base = _snap(man, head) if head else {"dirs": []}
+        if ref_dirs is not None and not ref_dirs <= set(base["dirs"]):
             raise CommitConflict(
-                f"positional delete targets {sorted(ref_dirs - set(head_dirs))} "
+                f"positional delete targets {sorted(ref_dirs - set(base['dirs']))} "
                 f"which snapshot {head} no longer owns (concurrent overwrite)"
             )
         snap_id = _max_id(man) + 1
@@ -911,34 +824,26 @@ def _delete_commit_entry(
             entry_del["seq"] = snap_id
         entry = {
             "id": snap_id,
-            "dirs": head_dirs,
+            "dirs": base["dirs"],
             "op": "delete",
-            "deletes": (list(_deletes_of(man, head)) if head else [])
-            + [entry_del],
+            "deletes": base.get("deletes", []) + [entry_del],
         }
-        new_man = {
-            "seq": man["seq"] + 1,
-            "current": snap_id,
-            "snapshots": man["snapshots"] + [entry],
-            "tags": man.get("tags", {}),
-            "txns": man.get("txns", {}),
-            "refs": man.get("refs", {}),
-            "dir_seq": man.get("dir_seq", {}),
-        }
-        if man.get("dir_stats"):
-            new_man["dir_stats"] = man["dir_stats"]
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            return snap_id
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(
-        f"delete commit lost the manifest CAS {max_retries} times in {table_dir}"
-    )
+        return {"current": snap_id, "snapshots": man["snapshots"] + [entry]}, snap_id
+
+    return _transact(table_dir, step)
 
 
-def rewrite_data_files(
-    spark: SparkSession, table_dir: str, max_retries: int = 16
-) -> int:
+def _require_head(man: dict, basis: int, what: str) -> None:
+    """Refuse a rewrite whose input was read at ``basis`` once any other
+    commit moved main's head."""
+    if man["current"] != basis:
+        raise CommitConflict(
+            f"{what} read snapshot {basis} but head moved to "
+            f"{man['current']} — rerun against the new head"
+        )
+
+
+def rewrite_data_files(spark: SparkSession, table_dir: str) -> int:
     """Compaction: materialize the current snapshot WITH its deletes
     applied into fresh data files and commit it as an overwrite — the
     delete list comes back empty, positions/keys are folded in (Iceberg
@@ -950,42 +855,24 @@ def rewrite_data_files(
     clobbering it with a stale materialization (run compaction
     exclusively or retry on conflict, as Iceberg's rewrite action does).
     """
-    man = _load_manifest(table_dir)
-    if not man["snapshots"]:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    man = _committed(table_dir)
     snap = _head_snap(man, table_dir)
-    basis = snap["id"]
     df = _plan_snapshot(spark, table_dir, man, snap)
     snap_dir = f"snap-{uuid.uuid4().hex[:12]}"
     df.write.mode("errorifexists").parquet(os.path.join(table_dir, snap_dir))
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
-        if man["current"] != basis:
-            raise CommitConflict(
-                f"compaction read snapshot {basis} but head moved to "
-                f"{man['current']} — rerun against the new head"
-            )
+
+    def step(man: dict):
+        _require_head(man, snap["id"], "compaction")
         snap_id = _max_id(man) + 1
+        # the compacted dir itself gets no stats (conservative scan)
         entry = {"id": snap_id, "dirs": [snap_dir], "op": "replace"}
-        new_man = {
-            "seq": man["seq"] + 1,
+        return {
             "current": snap_id,
             "snapshots": man["snapshots"] + [entry],
-            "tags": man.get("tags", {}),
-            "txns": man.get("txns", {}),
-            "refs": man.get("refs", {}),
-            "dir_seq": dict(man.get("dir_seq", {}), **{snap_dir: snap_id}),
-        }
-        if man.get("dir_stats"):
-            # the compacted dir itself has no stats (conservative scan)
-            new_man["dir_stats"] = man["dir_stats"]
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            return snap_id
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(
-        f"compaction lost the manifest CAS {max_retries} times in {table_dir}"
-    )
+            "dir_seq": dict(man["dir_seq"], **{snap_dir: snap_id}),
+        }, snap_id
+
+    return _transact(table_dir, step)
 
 
 def compaction_plan(
@@ -1031,12 +918,7 @@ def compaction_plan(
     return [b for b in bins if len(b) >= 2]
 
 
-def rewrite_dirs(
-    spark: SparkSession,
-    table_dir: str,
-    dirs: list[str],
-    max_retries: int = 16,
-) -> int:
+def rewrite_dirs(spark: SparkSession, table_dir: str, dirs: list[str]) -> int:
     """Compact a SUBSET of the head's data dirs into one — the apply
     half of binpack rewrite: the new snapshot keeps every other dir
     untouched, so a maintenance job can fold one bin at a time instead
@@ -1053,7 +935,6 @@ def rewrite_dirs(
     """
     man = _load_manifest(table_dir)
     snap = _head_snap(man, table_dir)
-    basis = snap["id"]
     if snap.get("deletes"):
         raise ValueError(
             "head snapshot carries merge-on-read deletes — "
@@ -1062,7 +943,7 @@ def rewrite_dirs(
     missing = [d for d in dirs if d not in snap["dirs"]]
     if missing:
         raise ValueError(
-            f"dirs {missing} are not part of head snapshot {basis}"
+            f"dirs {missing} are not part of head snapshot {snap['id']}"
         )
     if len(dirs) < 2:
         raise ValueError("a rewrite bin needs >= 2 dirs")
@@ -1071,72 +952,47 @@ def rewrite_dirs(
     df.coalesce(1).write.mode("errorifexists").parquet(
         os.path.join(table_dir, snap_dir)
     )
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
-        if man["current"] != basis:
-            raise CommitConflict(
-                f"bin rewrite read snapshot {basis} but head moved to "
-                f"{man['current']} — replan against the new head"
-            )
+
+    def step(man: dict):
+        _require_head(man, snap["id"], "bin rewrite")
         snap_id = _max_id(man) + 1
         kept = [d for d in snap["dirs"] if d not in set(dirs)]
-        entry = {
-            "id": snap_id,
-            "dirs": kept + [snap_dir],
-            "op": "rewrite",
-        }
-        new_man = {
-            "seq": man["seq"] + 1,
+        entry = {"id": snap_id, "dirs": kept + [snap_dir], "op": "rewrite"}
+        changes = {
             "current": snap_id,
             "snapshots": man["snapshots"] + [entry],
-            "tags": man.get("tags", {}),
-            "txns": man.get("txns", {}),
-            "refs": man.get("refs", {}),
             # the merged dir inherits the LOWEST source seq: every row
             # in it was committed at-or-after that point, and equality
             # deletes (none now, possibly later) scope conservatively
             "dir_seq": dict(
-                man.get("dir_seq", {}),
-                **{
-                    snap_dir: min(
-                        man.get("dir_seq", {}).get(d, 0) for d in dirs
-                    )
-                },
+                man["dir_seq"],
+                **{snap_dir: min(man["dir_seq"].get(d, 0) for d in dirs)},
             ),
         }
-        if man.get("dir_stats"):
-            stats = man["dir_stats"]
-            # merged bounds per column where EVERY bin dir has stats —
-            # else no stats for the merged dir (conservative scan)
-            per_dir = [stats.get(d) for d in dirs]
-            if all(per_dir):
-                commoncols = set(per_dir[0]).intersection(
-                    *[set(p) for p in per_dir[1:]]
-                )
-                merged = {
-                    c: [
-                        min(p[c][0] for p in per_dir),
-                        max(p[c][1] for p in per_dir),
-                    ]
-                    for c in commoncols
-                    if all(p[c][0] is not None for p in per_dir)
-                }
-                stats = dict(stats, **({snap_dir: merged} if merged else {}))
-            new_man["dir_stats"] = stats
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            return snap_id
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(
-        f"bin rewrite lost the manifest CAS {max_retries} times in {table_dir}"
-    )
+        # merged bounds per column where EVERY bin dir has stats — else
+        # no stats for the merged dir (conservative scan)
+        per_dir = [man.get("dir_stats", {}).get(d) for d in dirs]
+        if all(per_dir):
+            commoncols = set(per_dir[0]).intersection(
+                *[set(p) for p in per_dir[1:]]
+            )
+            merged = {
+                c: [
+                    min(p[c][0] for p in per_dir),
+                    max(p[c][1] for p in per_dir),
+                ]
+                for c in commoncols
+                if all(p[c][0] is not None for p in per_dir)
+            }
+            if merged:
+                changes["dir_stats"] = dict(man["dir_stats"], **{snap_dir: merged})
+        return changes, snap_id
+
+    return _transact(table_dir, step)
 
 
 def create_branch(
-    table_dir: str,
-    name: str,
-    from_version: int | None = None,
-    max_retries: int = 16,
+    table_dir: str, name: str, from_version: int | None = None
 ) -> int:
     """Create a named branch pointing at ``from_version`` (default: the
     current main snapshot) — Iceberg's branch ref, the staging half of
@@ -1146,42 +1002,31 @@ def create_branch(
     # workflows create the audit branch before any main data exists) —
     # the hypothesis branch-model sweep caught the missing makedirs
     os.makedirs(table_dir, exist_ok=True)
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
+
+    def step(man: dict):
         if name in man["refs"]:
             raise ValueError(f"branch {name!r} already exists in {table_dir}")
         start = man["current"] if from_version is None else from_version
         if start != 0:
-            _dirs_of(man, start)  # must name a real snapshot
-        new_man = dict(
-            man,
-            seq=man["seq"] + 1,
-            refs=dict(man["refs"], **{name: start}),
-        )
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            return start
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(f"create_branch lost the CAS {max_retries} times")
+            _snap(man, start)  # must name a real snapshot
+        return {"refs": dict(man["refs"], **{name: start})}, start
+
+    return _transact(table_dir, step)
 
 
-def drop_branch(table_dir: str, name: str, max_retries: int = 16) -> None:
+def drop_branch(table_dir: str, name: str) -> None:
     """Remove a branch ref. Its snapshots stay in history until vacuum
     (exactly Iceberg: dropping a ref never deletes data)."""
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
+
+    def step(man: dict):
         if name not in man["refs"]:
             raise ValueError(f"no branch {name!r} in {table_dir}")
-        refs = {k: v for k, v in man["refs"].items() if k != name}
-        new_man = dict(man, seq=man["seq"] + 1, refs=refs)
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            return
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(f"drop_branch lost the CAS {max_retries} times")
+        return {"refs": {k: v for k, v in man["refs"].items() if k != name}}, None
+
+    _transact(table_dir, step)
 
 
-def fast_forward(table_dir: str, branch: str, max_retries: int = 16) -> int:
+def fast_forward(table_dir: str, branch: str) -> int:
     """PUBLISH a branch: move main's pointer to the branch head —
     Iceberg's fast_forward, the atomic publish half of
     write-audit-publish. Refuses unless the branch head genuinely
@@ -1195,16 +1040,17 @@ def fast_forward(table_dir: str, branch: str, max_retries: int = 16) -> int:
     resurrecting the deleted rows (r9 advice fix; pytest
     test_snapshots.py::test_fast_forward_refuses_lost_main_delete).
     Returns the new main snapshot id."""
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
+
+    def step(man: dict):
         if branch not in man["refs"]:
             raise ValueError(f"no branch {branch!r} in {table_dir}")
         head = man["refs"][branch]
         if head == 0:
             raise ValueError(f"branch {branch!r} has no commits to publish")
-        head_dirs = set(_dirs_of(man, head))
+        head_snap = _snap(man, head)
         if man["current"] != 0:
-            cur_dirs = set(_dirs_of(man, man["current"]))
+            cur_snap = _snap(man, man["current"])
+            cur_dirs, head_dirs = set(cur_snap["dirs"]), set(head_snap["dirs"])
             if not cur_dirs <= head_dirs:
                 raise ValueError(
                     f"branch {branch!r} does not extend main "
@@ -1216,23 +1062,20 @@ def fast_forward(table_dir: str, branch: str, max_retries: int = 16) -> int:
             # deletes in, but then it also rewrote main's data dirs and
             # the dirs-subset check above already refused — so within a
             # dirs-subset publish, every main delete must survive
-            cur_dels = {d["dir"] for d in _deletes_of(man, man["current"])}
-            head_dels = {d["dir"] for d in _deletes_of(man, head)}
+            cur_dels = {d["dir"] for d in cur_snap.get("deletes", [])}
+            head_dels = {d["dir"] for d in head_snap.get("deletes", [])}
             if not cur_dels <= head_dels:
                 raise ValueError(
                     f"branch {branch!r} does not carry main's deletes "
                     f"({sorted(cur_dels - head_dels)}) — publish would "
                     "resurrect rows deleted on main"
                 )
-        new_man = dict(man, seq=man["seq"] + 1, current=head)
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            return head
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(f"fast_forward lost the CAS {max_retries} times")
+        return {"current": head}, head
+
+    return _transact(table_dir, step)
 
 
-def rollback_to(table_dir: str, version: int, max_retries: int = 16) -> int:
+def rollback_to(table_dir: str, version: int) -> int:
     """Iceberg's ``rollback_to_snapshot``: move MAIN's current pointer
     back to an earlier snapshot. Exactly like Iceberg, this writes NO
     new snapshot and deletes NO data — the abandoned commits stay in
@@ -1246,15 +1089,12 @@ def rollback_to(table_dir: str, version: int, max_retries: int = 16) -> int:
     roll back, re-run the corrected load, keep the full audit trail.
     Published through the same manifest CAS as every other ref move.
     """
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
-        _dirs_of(man, version)  # must name a real committed snapshot
-        new_man = dict(man, seq=man["seq"] + 1, current=version)
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            return version
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(f"rollback_to lost the CAS {max_retries} times")
+
+    def step(man: dict):
+        _snap(man, version)  # must name a real committed snapshot
+        return {"current": version}, version
+
+    return _transact(table_dir, step)
 
 
 def history(table_dir: str) -> list[int]:
@@ -1288,9 +1128,7 @@ def snapshots_metadata(
     Manifests written before the ``op`` field surface operation=NULL
     (additive evolution, same contract as the schema layer).
     """
-    man = _load_manifest(table_dir)
-    if not man["snapshots"]:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    man = _committed(table_dir)
     rows = []
     for snap in man["snapshots"]:
         names = sorted(
@@ -1345,9 +1183,7 @@ def files_metadata(spark: SparkSession, table_dir: str) -> DataFrame:
     manifest alone; the listing is driver-side O(files of the head
     snapshot), never a data read.
     """
-    man = _load_manifest(table_dir)
-    if not man["snapshots"]:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    man = _committed(table_dir)
     snap = _head_snap(man, table_dir)
     dir_seq = man.get("dir_seq", {})
     dir_stats = man.get("dir_stats", {})
@@ -1374,97 +1210,84 @@ def files_metadata(spark: SparkSession, table_dir: str) -> DataFrame:
     )
 
 
-def vacuum(table_dir: str, keep_last: int = 1, max_retries: int = 16) -> list[str]:
+def vacuum(table_dir: str, keep_last: int = 1) -> list[str]:
     """Explicitly destructive: drop history older than the last
     ``keep_last`` snapshots and delete directories no retained snapshot
     references (Iceberg's expire_snapshots). Superseded manifest
     versions are pruned too. Returns removed data dirs."""
-    import shutil
 
-    for attempt in range(max_retries):
-        man = _load_manifest(table_dir)
-        if len(man["snapshots"]) <= keep_last:
-            return []
+    def step(man: dict):
+        snaps = man["snapshots"]
         # retention keeps the last keep_last entries PLUS main's current
         # snapshot and every branch head: a ref must never dangle and a
         # branch's staged-but-unpublished data must survive retention
         pinned = {man["current"]} | set(man["refs"].values())
         kept = [
             snap
-            for i, snap in enumerate(man["snapshots"])
-            if i >= len(man["snapshots"]) - keep_last or snap["id"] in pinned
+            for i, snap in enumerate(snaps)
+            if i >= len(snaps) - keep_last or snap["id"] in pinned
         ]
-        if len(kept) == len(man["snapshots"]):
-            return []
+        if len(kept) == len(snaps):
+            return None, ([], 0)  # nothing expires, no version is pruned
         # a retained snapshot's merge-on-read delete files are as
         # load-bearing as its data dirs — expiring one would resurrect
         # deleted rows in a snapshot readers can still resolve
         keep_dirs = {d for s in kept for d in s["dirs"]} | {
             dl["dir"] for s in kept for dl in s.get("deletes", [])
         }
+        kept_ids = {s["id"] for s in kept}
         removed = []
-        for s in man["snapshots"][:-keep_last]:
+        for s in snaps:
+            if s["id"] in kept_ids:
+                continue
             for d in s["dirs"] + [dl["dir"] for dl in s.get("deletes", [])]:
                 if d not in keep_dirs and d not in removed:
                     removed.append(d)
-        # the tags + txns maps survive retention verbatim: a streaming
-        # batch replayed after its snapshot entry was trimmed must still
-        # be a no-op, or vacuum silently voids the exactly-once contract
-        # (txns is O(runs) by construction, so carrying it is ~free)
-        new_man = {
-            "seq": man["seq"] + 1,
-            "current": man["current"],
+        # the txns map is not among the changes, so it survives
+        # retention verbatim: a streaming batch replayed after its
+        # snapshot entry was trimmed must still be a no-op, or vacuum
+        # silently voids the exactly-once contract (txns is O(runs) by
+        # construction, so carrying it is ~free)
+        return {
             "snapshots": kept,
-            "tags": man.get("tags", {}),
-            "txns": man.get("txns", {}),
-            "refs": man.get("refs", {}),
-            # sequence numbers travel with the dirs that survive
+            # sequence numbers and stats travel with the dirs that survive
             "dir_seq": {
-                d: q
-                for d, q in man.get("dir_seq", {}).items()
+                d: q for d, q in man["dir_seq"].items() if d in keep_dirs
+            },
+            "dir_stats": {
+                d: s
+                for d, s in man.get("dir_stats", {}).items()
                 if d in keep_dirs
             },
-        }
-        kept_stats = {
-            d: s
-            for d, s in man.get("dir_stats", {}).items()
-            if d in keep_dirs
-        }
-        if kept_stats:
-            new_man["dir_stats"] = kept_stats
-        # publish the trimmed manifest FIRST (through the same CAS as
-        # commits) so a crash mid-delete can only leave orphan
-        # directories, never a dangling manifest
-        new_man = _carry_log(man, new_man)
-        if _publish_manifest(table_dir, new_man):
-            for d in removed:
-                shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
-            for d in removed:
-                # a fully-expired partitioned commit leaves a root husk
-                # above its nested partition dirs holding only writer
-                # metadata (_SUCCESS, .crc) — drop it once no partition
-                # dir (or any other real content) remains
-                if "/" in d:
-                    root = os.path.join(table_dir, d.split("/", 1)[0])
-                    with contextlib.suppress(OSError):
-                        if all(
-                            f.startswith(("_", "."))
-                            and os.path.isfile(os.path.join(root, f))
-                            for f in os.listdir(root)
-                        ):
-                            shutil.rmtree(root, ignore_errors=True)
-            for seq in _manifest_versions(table_dir):
-                if seq < new_man["seq"]:
-                    # two concurrent vacuums can race on the same stale
-                    # version; the loser finding it already gone IS
-                    # success (r8 advice fix)
-                    with contextlib.suppress(FileNotFoundError):
-                        os.unlink(_manifest_path(table_dir, seq))
-            return removed
-        time.sleep(0.001 * (attempt + 1))
-    raise RuntimeError(
-        f"vacuum lost the manifest CAS {max_retries} times in {table_dir}"
-    )
+        }, (removed, man["seq"] + 1)
+
+    # the trimmed manifest is published FIRST (through the same CAS as
+    # commits) so a crash mid-delete can only leave orphan directories,
+    # never a dangling manifest
+    removed, published = _transact(table_dir, step)
+    for d in removed:
+        shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
+    for d in removed:
+        # a fully-expired partitioned commit leaves a root husk above
+        # its nested partition dirs holding only writer metadata
+        # (_SUCCESS, .crc) — drop it once no partition dir (or any
+        # other real content) remains
+        if "/" in d:
+            root = os.path.join(table_dir, d.split("/", 1)[0])
+            with contextlib.suppress(OSError):
+                if all(
+                    f.startswith(("_", "."))
+                    and os.path.isfile(os.path.join(root, f))
+                    for f in os.listdir(root)
+                ):
+                    shutil.rmtree(root, ignore_errors=True)
+    for seq in _manifest_versions(table_dir):
+        if seq < published:
+            # two concurrent vacuums can race on the same stale version;
+            # the loser finding it already gone IS success (r8 advice fix)
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(_manifest_path(table_dir, seq))
+    return removed
 
 
 def read_incremental(
@@ -1481,18 +1304,11 @@ def read_incremental(
     raises ValueError, exactly as Iceberg's append scan refuses overwrite
     snapshots). ``after_version=0`` returns the whole current snapshot.
     """
-    man = _load_manifest(table_dir)
-    if not man["snapshots"]:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    by_id = {s["id"]: s for s in man["snapshots"]}
+    man = _committed(table_dir)
     cur = man["current"]
-    if after_version == 0:
-        prev_dirs: list[str] = []
-    else:
-        if after_version not in by_id:
-            raise ValueError(f"snapshot {after_version} not in history")
-        prev_dirs = by_id[after_version]["dirs"]
-    cur_dirs = by_id[cur]["dirs"]
+    cur_snap = _snap(man, cur)
+    prev = _snap(man, after_version) if after_version else {"dirs": []}
+    prev_dirs, cur_dirs = prev["dirs"], cur_snap["dirs"]
     if not set(prev_dirs) <= set(cur_dirs):
         raise ValueError(
             f"snapshots {after_version}..{cur} are not append lineage "
@@ -1502,8 +1318,7 @@ def read_incremental(
     # same way an overwrite rewrites physical history — "what was
     # appended" is no longer the whole delta, so refuse (Iceberg's
     # incremental append scan rejects delete snapshots identically)
-    prev_dels = [] if after_version == 0 else by_id[after_version].get("deletes", [])
-    if by_id[cur].get("deletes", []) != prev_dels:
+    if cur_snap.get("deletes", []) != prev.get("deletes", []):
         raise ValueError(
             f"snapshots {after_version}..{cur} contain row-level deletes; "
             "incremental append scan undefined over delete snapshots"

@@ -5,8 +5,8 @@ tables, whose commit protocol is what makes `foreachBatch` exactly-once
 in practice (a replayed batch must not double-append). This module
 composes the repo's two halves of that story: Structured Streaming's
 micro-batch replay (a batch id is stable across retries) and
-`sources/snapshots.py`'s CAS manifest commits with idempotent tags —
-the tag makes re-delivery a no-op *inside the same compare-and-swap
+`sources/snapshots.py`'s CAS manifest commits with an idempotent txn —
+the txn makes re-delivery a no-op *inside the same compare-and-swap
 loop that publishes the manifest*, so even a crash between the sink's
 data write and its commit cannot double-apply.
 
@@ -85,10 +85,10 @@ def drain_to_snapshots(
     checkpoint_dir: str | None = None,
     run_id: str | None = None,
 ) -> str:
-    """Drain an AvailableNow stream into ``table_dir`` via tagged
+    """Drain an AvailableNow stream into ``table_dir`` via txn
     snapshot commits; blocks until every pending micro-batch committed.
 
-    Returns the run_id used for the drain's tags. Re-running with the
+    Returns the run_id used for the drain's txns. Re-running with the
     SAME ``checkpoint_dir`` resumes/replays idempotently (same run_id,
     same batch ids); a fresh call mints a fresh checkpoint AND a fresh
     run_id, so repeated drains into one table each land their data

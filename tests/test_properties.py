@@ -2103,7 +2103,7 @@ def test_partition_evolution_prune_matches_flat_filter(
     )
     assert got == want
     man = snapshots._load_manifest(tdir)
-    assert n_scan + n_skip == len(snapshots._dirs_of(man, man["current"]))
+    assert n_scan + n_skip == len(snapshots._snap(man, man["current"])["dirs"])
 
 
 # ---------------------------------------------------------------------------

@@ -90,6 +90,17 @@ def test_vacuum_drops_only_unreferenced_history(spark, tdir):
     assert len(snapshots._manifest_versions(tdir)) == 1
 
 
+def test_vacuum_keep_last_zero_removes_expired_dirs(tdir):
+    """keep_last=0 keeps only the pinned head and deletes every dir the
+    expired snapshots alone reached (metadata-only commits, no Spark)."""
+    for i in range(3):
+        os.makedirs(os.path.join(tdir, f"snap-{i}"))
+        snapshots._commit_entry(tdir, f"snap-{i}", "overwrite")
+    assert snapshots.vacuum(tdir, keep_last=0) == ["snap-0", "snap-1"]
+    assert snapshots.history(tdir) == [3]
+    assert _snap_dirs(tdir) == ["snap-2"]
+
+
 def test_concurrent_writers_no_lost_update(spark, tdir):
     """Two threads commit appends concurrently; the manifest-version CAS
     must arbitrate so BOTH snapshots land (no last-writer-wins lost
@@ -150,20 +161,6 @@ def test_many_concurrent_writers_all_land(spark, tdir):
     assert sorted(r.x for r in snapshots.read(spark, tdir).collect()) == list(range(n))
 
 
-def test_tagged_commit_is_idempotent(spark, tdir):
-    v1 = snapshots.commit(_df(spark, [1]), tdir, mode="append", tag="batch-0")
-    # replay with the same tag: no new snapshot, same id back, data once
-    v_replay = snapshots.commit(
-        _df(spark, [99]), tdir, mode="append", tag="batch-0"
-    )
-    assert v_replay == v1
-    assert snapshots.history(tdir) == [1]
-    assert [r.x for r in snapshots.read(spark, tdir).collect()] == [1]
-    # a different tag commits normally
-    v2 = snapshots.commit(_df(spark, [2]), tdir, mode="append", tag="batch-1")
-    assert v2 == 2 and snapshots.history(tdir) == [1, 2]
-
-
 def test_snapshot_sink_drains_and_survives_replay(spark, tmp_path, sf_dir):
     from airflow_iceberg_pipeline_stock_tracker_spark.streaming.snapshot_sink import (
         drain_to_snapshots,
@@ -189,8 +186,8 @@ def test_second_drain_into_same_table_is_not_mistaken_for_replay(
     spark, tmp_path, sf_dir
 ):
     """The r7 advice bug: batch ids restart at 0 per checkpoint, so two
-    drains into one table used to collide on tag batch-0 and the second
-    drain's data was silently dropped. run_id-namespaced tags fix it."""
+    drains into one table used to collide on batch id 0 and the second
+    drain's data was silently dropped. run_id-namespaced txns fix it."""
     from airflow_iceberg_pipeline_stock_tracker_spark.streaming.snapshot_sink import (
         drain_to_snapshots,
     )
@@ -212,17 +209,17 @@ def test_second_drain_into_same_table_is_not_mistaken_for_replay(
 
 
 def test_replay_after_vacuum_is_still_idempotent(spark, tdir):
-    """The r7 advice bug: vacuum used to drop idempotency tags with the
+    """The r7 advice bug: vacuum used to drop idempotency keys with the
     trimmed snapshot entries, so a post-retention replay double-appended.
-    The manifest-level tags map survives vacuum."""
-    snapshots.commit(_df(spark, [1]), tdir, mode="append", tag="r-batch-0")
-    snapshots.commit(_df(spark, [2]), tdir, mode="append", tag="r-batch-1")
-    snapshots.commit(_df(spark, [3]), tdir, mode="append", tag="r-batch-2")
+    The manifest-level txns map survives vacuum."""
+    snapshots.commit(_df(spark, [1]), tdir, mode="append", txn=("r", 0))
+    snapshots.commit(_df(spark, [2]), tdir, mode="append", txn=("r", 1))
+    snapshots.commit(_df(spark, [3]), tdir, mode="append", txn=("r", 2))
     snapshots.vacuum(tdir, keep_last=1)
     assert snapshots.history(tdir) == [3]
     # replay a batch whose snapshot entry retention trimmed away
-    v = snapshots.commit(_df(spark, [99]), tdir, mode="append", tag="r-batch-0")
-    assert v in (1, 2, 3)  # recognized, returns the original id
+    v = snapshots.commit(_df(spark, [99]), tdir, mode="append", txn=("r", 0))
+    assert v == 3  # recognized as a replay, returns the current id
     assert snapshots.history(tdir) == [3]  # no new snapshot
     assert sorted(r.x for r in snapshots.read(spark, tdir).collect()) == [1, 2, 3]
 
@@ -266,7 +263,6 @@ def test_txn_commit_high_water_replay_and_o_runs_manifest(spark, tdir):
     assert snapshots.history(tdir) == [1, 2, 3, 4]
     man = snapshots._load_manifest(tdir)
     assert man["txns"] == {"runA": 3}        # one entry after 4 batches
-    assert man["tags"] == {}                 # txn path adds no tag rows
     # replay ANY already-committed version (not just the latest): no-op
     for b in (0, 2, 3):
         snapshots.commit(_df(spark, [99]), tdir, mode="append", txn=("runA", b))
@@ -821,6 +817,9 @@ def test_read_pruned_on_version_and_ref(spark, tdir):
 
     with pytest.raises(ValueError):
         snapshots.read_pruned(spark, tdir, "x", lo=1, ref="nope")
+    # an unknown version raises the same error read() raises
+    with pytest.raises(ValueError, match="not in history"):
+        snapshots.read_pruned(spark, tdir, "x", lo=1, version=99)
     with pytest.raises(ValueError):
         snapshots.read_pruned(spark, tdir, "x")  # no bounds
 
@@ -853,8 +852,8 @@ def test_partition_evolution_mixed_layouts_read_and_prune(spark, tdir):
         tdir, "d", "month",
     )
     man = snapshots._load_manifest(tdir)
-    assert len(snapshots._dirs_of(man, v1)) == 3  # one dir per day
-    dirs = snapshots._dirs_of(man, v2)
+    assert len(snapshots._snap(man, v1)["dirs"]) == 3  # one dir per day
+    dirs = snapshots._snap(man, v2)["dirs"]
     assert len(dirs) == 4  # 3 day dirs + 1 month dir, one snapshot
     assert all("/" in d and "_sg_part=" in d for d in dirs)
     # the spec is recorded per commit (introspection only)

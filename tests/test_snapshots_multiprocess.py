@@ -35,7 +35,7 @@ def _writer(table_dir: str, wid: int, barrier, out_q) -> None:
                 barrier.wait(timeout=30)
             ids.append(
                 snapshots._commit_entry(
-                    table_dir, snap_dir, "append", 200, f"w{wid}-{i}"
+                    table_dir, snap_dir, "append", txn=(f"w{wid}", i)
                 )
             )
         out_q.put(("ok", wid, ids))
@@ -97,13 +97,13 @@ def test_vacuum_vs_commit_race_keeps_readers_and_tags_alive(tmp_path):
     """One process vacuums aggressively (keep_last=1, which also prunes
     superseded manifest versions) while another appends: neither may
     crash (the _load_manifest list-then-open window), the final current
-    id must count every commit, and idempotency tags must survive
-    retention (replay stays a no-op after the dust settles)."""
+    id must count every commit, and the writer's txn high-water must
+    survive retention (replay stays a no-op after the dust settles)."""
     table_dir = str(tmp_path / "tbl")
     os.makedirs(table_dir)
     # seed so the vacuumer has something to trim immediately
     os.makedirs(os.path.join(table_dir, "snap-seed"))
-    snapshots._commit_entry(table_dir, "snap-seed", "append", 50, "seed")
+    snapshots._commit_entry(table_dir, "snap-seed", "append")
     ctx = _fork()
     q = ctx.Queue()
     barrier = ctx.Barrier(2)
@@ -118,14 +118,13 @@ def test_vacuum_vs_commit_race_keeps_readers_and_tags_alive(tmp_path):
     man = snapshots._load_manifest(table_dir)
     assert man["current"] == 1 + _N_PER_WRITER  # seed + every append
     assert man["snapshots"], "vacuum may never leave an empty history"
-    # exactly-once survives retention: every tag ever committed is still
-    # recognized, even though vacuum trimmed most snapshot entries
+    # exactly-once survives retention: every txn version ever committed
+    # is still recognized, even though vacuum trimmed most snapshot entries
     for i in range(_N_PER_WRITER):
-        tag = f"w7-{i}"
         got = snapshots._commit_entry(
-            table_dir, f"snap-replay-{i}", "append", 50, tag
+            table_dir, f"snap-replay-{i}", "append", txn=("w7", i)
         )
-        assert got <= 1 + _N_PER_WRITER, f"tag {tag} re-committed as {got}"
+        assert got <= 1 + _N_PER_WRITER, f"txn w7/{i} re-committed as {got}"
     assert snapshots._load_manifest(table_dir)["current"] == 1 + _N_PER_WRITER
 
 
@@ -141,7 +140,7 @@ def _txn_writer(table_dir: str, wid: int, barrier, out_q) -> None:
                 barrier.wait(timeout=30)
             results.append(
                 snapshots._commit_entry(
-                    table_dir, snap_dir, "append", 200, None, ("run", i)
+                    table_dir, snap_dir, "append", txn=("run", i)
                 )
             )
         out_q.put(("ok", wid, results))
@@ -196,7 +195,7 @@ def test_two_process_vacuums_race_without_crashing(tmp_path):
     table_dir = str(tmp_path / "tbl")
     os.makedirs(table_dir)
     os.makedirs(os.path.join(table_dir, "snap-seed"))
-    snapshots._commit_entry(table_dir, "snap-seed", "append", 50, "seed")
+    snapshots._commit_entry(table_dir, "snap-seed", "append")
     ctx = _fork()
     q = ctx.Queue()
     barrier = ctx.Barrier(3)
@@ -237,7 +236,7 @@ def test_rollback_races_cross_process_commits_without_corruption(tmp_path):
     consistent whichever mutation won the last version."""
     table_dir = str(tmp_path / "tbl")
     os.makedirs(os.path.join(table_dir, "snap-base"), exist_ok=True)
-    snapshots._commit_entry(table_dir, "snap-base", "append", 200, "base")
+    snapshots._commit_entry(table_dir, "snap-base", "append")
 
     ctx = _fork()
     barrier = ctx.Barrier(2)
@@ -260,6 +259,6 @@ def test_rollback_races_cross_process_commits_without_corruption(tmp_path):
     assert len(ids) == 1 + _N_PER_WRITER
     # every log record resolves to a real snapshot
     for rec in man.get("log", []):
-        snapshots._dirs_of(man, rec["id"])
+        snapshots._snap(man, rec["id"])
     # head is a real snapshot and readable
-    snapshots._dirs_of(man, man["current"])
+    snapshots._snap(man, man["current"])

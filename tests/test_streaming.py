@@ -687,3 +687,54 @@ def test_capacity_knee_retries_inconclusive_ladder_end(monkeypatch):
     assert knee["first_failed_offer"] == 300  # bisected
     assert knee["n_attempts"] == 2
     assert knee["discarded_attempts"][0]["inconclusive_offer"] == 200
+
+
+def test_events_micro_batch_parity_counts_on_the_executors(
+    spark, sf_dir, monkeypatch
+):
+    """The parity row counts each side of its diff on the executors: no
+    collect made while it runs brings more than 3 rows to the driver,
+    however many (hour, event_type) groups the batch side has."""
+    from airflow_iceberg_pipeline_stock_tracker_spark.plans.streaming_queries import (
+        events_micro_batch_parity,
+    )
+
+    frame_cls = type(spark.range(1))  # the concrete DataFrame class
+    sizes: list[int] = []
+    collect = frame_cls.collect
+
+    def spied(self):
+        rows = collect(self)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", spied)
+    row = events_micro_batch_parity(spark, sf_dir).collect()[0]
+    monkeypatch.undo()
+    assert (row.n_only_batch, row.n_only_stream) == (0, 0)
+    assert row.keys_only_batch == row.keys_only_stream == ""
+    assert row.n_rows > 3
+    assert sizes and max(sizes) <= 3, sizes
+
+
+def test_parity_summary_names_the_diverging_keys(spark):
+    from airflow_iceberg_pipeline_stock_tracker_spark.plans.streaming_queries import (
+        _parity_summary,
+    )
+
+    schema = "k string, d date, v int"
+    day = dt.date(2024, 1, 2)
+    batch = spark.createDataFrame(
+        [("A", day, 1), ("B", day, 2), ("C", day, 3), ("C", day, 3)], schema
+    )
+    stream = spark.createDataFrame(
+        [("A", day, 1), ("B", day, 9), ("C", day, 3), ("D", day, 4)], schema
+    )
+    # B differs in a value column, one C duplicate is missing, D is extra
+    assert _parity_summary(batch, stream, ["k", "d"]) == (
+        2,
+        2,
+        4,
+        "B|2024-01-02,C|2024-01-02",
+        "B|2024-01-02,D|2024-01-02",
+    )
