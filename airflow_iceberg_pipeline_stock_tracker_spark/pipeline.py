@@ -95,8 +95,8 @@ def _insert(df: DataFrame, name: str, overwrite: bool) -> None:
     # the pipeline must be correct under ANY caller's session (the
     # external correctness driver supplies its own): under the default
     # "static" mode an INSERT OVERWRITE would truncate the whole table.
-    # Save/set/restore around the write, same pattern as streaming's
-    # _drain uses for shuffle.partitions.
+    # Save/set/restore around the write, same pattern as
+    # streaming/drain.state_partitions uses for shuffle.partitions.
     conf_key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(conf_key, None)
     if overwrite:

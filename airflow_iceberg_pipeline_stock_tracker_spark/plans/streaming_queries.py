@@ -18,6 +18,7 @@ double aggregate are not comparable across engines).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -30,34 +31,24 @@ from ..sources.tables import load_table, local_df
 from ..streaming import dedup as sdedup
 from ..streaming import joins as sjoins
 from ..streaming import stateful, windows
+from ..streaming.drain import file_stream, state_partitions
 
 
 def _drain(stream_df: DataFrame, mode: str = "complete") -> DataFrame:
-    """Drain with a state-partition count sized to the state volume.
-
-    Every stateful streaming operator keeps ONE state-store instance per
-    shuffle partition, and every micro-batch commits every instance
-    (per-instance file I/O) — so oversized partition counts are pure
-    overhead: 32 instances for a few thousand keys measured ~0.5s/query
-    slower than 8. Production sizing is the same decision in the other
-    direction (more partitions for more state), and is load-bearing
-    there because the count is FROZEN into the first checkpoint.
-    Results are partition-count-invariant (exact integer arithmetic
-    everywhere on the oracle surface). Override with
-    $SPARK_GRAFT_STREAM_PARTITIONS.
-    """
+    """Drain to a memory sink with the state-partition count sized to
+    the state volume (streaming/drain.STATE_PARTITIONS)."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
     name = "q_" + uuid.uuid4().hex[:12]
-    try:
+    with state_partitions(spark):
         windows.run_to_memory(stream_df, name, mode=mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return stream_df.sparkSession.table(name)
+    return spark.table(name)
+
+
+def _fresh_db(spark: SparkSession, db: str) -> None:
+    """Drop ``db`` and any files a crashed run left in its location."""
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
 
 
 # scratch landing zones, one per (kind, sf_dir) per process: four streaming
@@ -81,6 +72,33 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events", sf_dir, lambda p: ev.write.mode("overwrite").parquet(p)
     )
     return spark.readStream.schema(ev.schema).parquet(path)
+
+
+def _events_multi(spark: SparkSession, sf_dir: str) -> str:
+    """Events landing dir of four files: four one-file micro-batches,
+    each spanning many hours, for the foreachBatch sink rows."""
+    ev = load_table(spark, sf_dir, "events")
+    return _scratch_dir(
+        "events_multi",
+        sf_dir,
+        lambda p: ev.repartition(4).write.mode("overwrite").parquet(p),
+    )
+
+
+def _n_mismatch(
+    merged: DataFrame, onepass: DataFrame, keys: list[str], value: str, by: str
+) -> DataFrame:
+    """Per ``by``: the number of ``keys`` whose ``value`` differs between
+    the two sides (null-safe full-outer diff, so a key present on only
+    one side counts)."""
+    diff = merged.select(*keys, F.col(value).alias("v_m")).join(
+        onepass.select(*keys, F.col(value).alias("v_o")), keys, "full_outer"
+    )
+    return diff.groupBy(by).agg(
+        F.count(F.when(~F.col("v_m").eqNullSafe(F.col("v_o")), 1)).alias(
+            "n_mismatch"
+        )
+    )
 
 
 def _events_stream_seq_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,12 +126,7 @@ def _events_stream_seq_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, f in enumerate(files):
             os.utime(f, (base + i, base + i))
 
-    path = _scratch_dir("events_seq", sf_dir, build)
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    return file_stream(spark, _scratch_dir("events_seq", sf_dir, build), ev.schema)
 
 
 def streaming_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,8 +383,6 @@ def pipeline_micro_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the exactly-once + ascending-date contract surfaced as a
     hash-checked driver row rather than only a pytest.
     """
-    import shutil
-
     from airflow_iceberg_pipeline_stock_tracker_spark import pipeline
     from airflow_iceberg_pipeline_stock_tracker_spark.sources.stock_api import (
         DeterministicBarClient,
@@ -381,11 +392,9 @@ def pipeline_micro_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airflow_iceberg_pipeline_stock_tracker_spark.streaming import micro_batch
 
     days = ["2024-01-01", "2024-01-02", "2024-01-03"]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     dbs = {"batch": "parity_batch", "stream": "parity_stream"}
     for db in dbs.values():
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
+        _fresh_db(spark, db)
 
     pipeline.backfill(spark, days[0], days[-1], db=dbs["batch"])
 
@@ -459,29 +468,19 @@ def events_ohlc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     render final bars from STATE ONLY. The oracle recomputes the bars
     from raw events, so a hash match proves the incremental fold path
     equals the full recompute."""
-    import shutil
-
     from ..streaming import continuous_agg
 
     db = "cagg_query"
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events")
-    path = _scratch_dir(
-        "events_multi",
-        sf_dir,
-        lambda p: ev.repartition(4).write.mode("overwrite").parquet(p),
-    )
+    _fresh_db(spark, db)
     ckpt = tempfile.mkdtemp(prefix="graft_cagg_ckpt_")
-    continuous_agg.run_ohlc_stream(spark, path, ckpt, db=db, max_files_per_trigger=1)
+    continuous_agg.run_ohlc_stream(spark, _events_multi(spark, sf_dir), ckpt, db=db)
     return continuous_agg.rendered_bars(spark, db)
 
 
 def streaming_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sketch tier's streaming twin (r11 verdict ask #6): drain the
     events file stream through the per-batch HLL register sink
-    (streaming/hll_sink.py — one src_batch partition of max-rho
+    (streaming/sketch_sinks.py — one src_batch partition of max-rho
     registers per micro-batch, replay-idempotent by layout), MAX-merge
     the stored partials at read, and prove the result equals the batch
     one-pass build at REGISTER level (full-outer mismatch count == 0
@@ -489,43 +488,18 @@ def streaming_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical closing float expression — the oracle recomputes the
     one-pass registers from raw events, so a hash match proves the
     incremental fold path exact to the bit."""
-    import shutil
-
-    from ..streaming import hll_sink
+    from ..streaming import sketch_sinks
     from .timeseries import HLL_ALPHA, HLL_M, HLL_W
 
     db = "hll_stream"
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events")
-    path = _scratch_dir(
-        "events_multi",
-        sf_dir,
-        lambda p: ev.repartition(4).write.mode("overwrite").parquet(p),
-    )
+    _fresh_db(spark, db)
     ckpt = tempfile.mkdtemp(prefix="graft_hll_ckpt_")
-    hll_sink.run_hll_stream(spark, path, ckpt, db=db, max_files_per_trigger=1)
+    sketch_sinks.run_hll_stream(spark, _events_multi(spark, sf_dir), ckpt, db=db)
 
-    merged = hll_sink.merged_registers(spark, db)
-    onepass = hll_sink._batch_registers(ev)
-    mism = (
-        merged.withColumnRenamed("maxrho", "rho_m")
-        .join(
-            onepass.withColumnRenamed("maxrho", "rho_o"),
-            ["event_type", "bucket"],
-            "full_outer",
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum(
-                F.when(
-                    F.coalesce(F.col("rho_m"), F.lit(-1))
-                    != F.coalesce(F.col("rho_o"), F.lit(-1)),
-                    1,
-                ).otherwise(0)
-            ).alias("n_mismatch")
-        )
+    merged = sketch_sinks.merged_registers(spark, db)
+    onepass = sketch_sinks._batch_registers(load_table(spark, sf_dir, "events"))
+    mism = _n_mismatch(
+        merged, onepass, ["event_type", "bucket"], "maxrho", "event_type"
     )
     per_type = merged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_obs"),
@@ -598,7 +572,7 @@ def streaming_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the per-batch partition layout does real work: counter
     addition is NOT idempotent, so exactly-once under replay is a
     property of the layout alone (a re-delivered batch overwrites its
-    own partition instead of appending) — unlike hll_sink's max, which
+    own partition instead of appending) — unlike the HLL sink's max, which
     would forgive a double write anyway.
 
     The whole surface is pure int64 (counter sums, per-j bucket counts)
@@ -607,44 +581,17 @@ def streaming_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     output. The oracle recomputes the one-pass sketch from raw events,
     so a hash match proves the incremental fold path exact.
     """
-    import shutil
-
     from ..operators import cms as cms_ops
     from ..streaming import sketch_sinks
 
     db = "cms_stream"
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events")
-    path = _scratch_dir(
-        "events_multi",
-        sf_dir,
-        lambda p: ev.repartition(4).write.mode("overwrite").parquet(p),
-    )
+    _fresh_db(spark, db)
     ckpt = tempfile.mkdtemp(prefix="graft_cms_ckpt_")
-    sketch_sinks.run_cms_stream(spark, path, ckpt, db=db, max_files_per_trigger=1)
+    sketch_sinks.run_cms_stream(spark, _events_multi(spark, sf_dir), ckpt, db=db)
 
     merged = sketch_sinks.merged_cms(spark, db)
-    onepass = cms_ops.cms_build(ev, "user_id")
-    mism = (
-        merged.withColumnRenamed("cnt", "cnt_m")
-        .join(
-            onepass.withColumnRenamed("cnt", "cnt_o"),
-            ["j", "bucket"],
-            "full_outer",
-        )
-        .groupBy("j")
-        .agg(
-            F.sum(
-                F.when(
-                    F.coalesce(F.col("cnt_m"), F.lit(-1))
-                    != F.coalesce(F.col("cnt_o"), F.lit(-1)),
-                    1,
-                ).otherwise(0)
-            ).alias("n_mismatch")
-        )
-    )
+    onepass = cms_ops.cms_build(load_table(spark, sf_dir, "events"), "user_id")
+    mism = _n_mismatch(merged, onepass, ["j", "bucket"], "cnt", "j")
     per_j = merged.groupBy("j").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
         F.sum("cnt").cast("bigint").alias("total_cnt"),
@@ -699,42 +646,19 @@ def streaming_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kmv_distinct_sql, parity-pinned by tests/test_kmv.py), so a hash
     match proves the incremental fold path exact to the sample set.
     """
-    import shutil
-
     from ..operators import kmv as kmv_ops
     from ..streaming import sketch_sinks
 
     db = "kmv_stream"
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events")
-    path = _scratch_dir(
-        "events_multi",
-        sf_dir,
-        lambda p: ev.repartition(4).write.mode("overwrite").parquet(p),
-    )
+    _fresh_db(spark, db)
     ckpt = tempfile.mkdtemp(prefix="graft_kmv_ckpt_")
-    sketch_sinks.run_kmv_stream(spark, path, ckpt, db=db, max_files_per_trigger=1)
+    sketch_sinks.run_kmv_stream(spark, _events_multi(spark, sf_dir), ckpt, db=db)
 
     merged = sketch_sinks.merged_kmv(spark, db)
+    ev = load_table(spark, sf_dir, "events")
     onepass = kmv_ops.bottom_k(ev, ["event_type"], "user_id")
-    mism = (
-        merged.withColumn("in_m", F.lit(1))
-        .join(
-            onepass.withColumn("in_o", F.lit(1)),
-            ["event_type", "h"],
-            "full_outer",
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("in_m").isNull() | F.col("in_o").isNull(), 1
-                ).otherwise(0)
-            ).alias("n_mismatch")
-        )
-    )
+    # the sample is a set of (event_type, h): h is its own value
+    mism = _n_mismatch(merged, onepass, ["event_type", "h"], "h", "event_type")
     est = kmv_ops.kmv_estimate(merged, ["event_type"])
     return (
         est.join(mism, "event_type")
@@ -800,19 +724,9 @@ def streaming_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch on every later one — exactly reconstructs it."""
     from ..streaming import cdc
 
-    ev = load_table(spark, sf_dir, "events")
-    path = _scratch_dir(
-        "events_multi",
-        sf_dir,
-        lambda p: ev.repartition(4).write.mode("overwrite").parquet(p),
-    )
     tgt = os.path.join(tempfile.mkdtemp(prefix="graft_cdc_"), "balances")
     ckpt = tempfile.mkdtemp(prefix="graft_cdc_ckpt_")
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    cdc.run_merge_apply(spark, path, schema, tgt, ckpt)
+    cdc.run_merge_apply(spark, _events_multi(spark, sf_dir), tgt, ckpt)
     return (
         spark.read.schema(cdc.TARGET_SCHEMA)
         .parquet(tgt)

@@ -811,8 +811,8 @@ def _delete_commit_entry(
     correct however many writers raced in between."""
 
     def step(man: dict):
-        head = man["current"]
-        base = _snap(man, head) if head else {"dirs": []}
+        base = _head_snap(man, table_dir)
+        head = base["id"]
         if ref_dirs is not None and not ref_dirs <= set(base["dirs"]):
             raise CommitConflict(
                 f"positional delete targets {sorted(ref_dirs - set(base['dirs']))} "

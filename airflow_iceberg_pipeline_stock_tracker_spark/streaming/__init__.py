@@ -8,4 +8,8 @@ This package is the north-star re-expression: the same validate → promote
 owes its users — watermarked tumbling/sliding/session windows
 (windows.py) and a custom stateful rolling operator
 (stateful.py, applyInPandasWithState).
+
+Every foreachBatch sink (micro_batch, cdc, continuous_agg, sketch_sinks,
+snapshot_sink) runs on drain.py's one AvailableNow drain, and every
+state-sized shuffle goes through its ``state_partitions``.
 """

@@ -12,14 +12,20 @@ Replay safety: the target swap is rename-aside (write staged, rotate),
 so a crash leaves either the live dir or its ``.old`` sibling holding
 the pre-batch table; ``_read_target`` restores the sibling if the crash
 hit between the two renames, and the checkpoint decides whether the
-batch re-runs. A re-run of a batch whose swap fully completed WOULD
-double-apply — production pairs this with the applied-batch ledger
-pattern from ``streaming/continuous_agg.py`` (src_batch tagging); here
-the swap is atomic-per-batch and the scope is the parity proof.
+batch re-runs. A batch can also be re-delivered after its swap fully
+completed (the checkpoint's offset commit was lost). The merge
+accumulates, so that re-run would double-apply; instead the staged dir
+carries a ``_txn.json`` high-water map ``{run_id: batch_id}`` (the
+snapshot sink's txn pattern: ``run_id`` is the checkpoint's
+``run_id_for_checkpoint``, because batch ids restart at 0 per
+checkpoint), written before the rename so it moves atomically with the
+data, and a batch at or below its run's high-water returns without
+writing. The parquet reader skips ``_``-prefixed files.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -28,8 +34,12 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents
 from ..operators.merge import merge_upsert
+from .drain import drain, file_stream
+from .snapshot_sink import run_id_for_checkpoint
 
 TARGET_SCHEMA = "user_id bigint, n_events bigint, bal_cents bigint"
+
+TXN_FILE = "_txn.json"
 
 
 def _read_target(spark: SparkSession, target_dir: str) -> DataFrame:
@@ -47,13 +57,27 @@ def _read_target(spark: SparkSession, target_dir: str) -> DataFrame:
     return local_df(spark, [], TARGET_SCHEMA)
 
 
+def _applied(target_dir: str) -> dict[str, int]:
+    """The target's ``{run_id: high-water batch_id}`` map."""
+    path = os.path.join(target_dir, TXN_FILE)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
 def apply_purchases_batch(
-    batch: DataFrame, batch_id: int, target_dir: str
+    batch: DataFrame, batch_id: int, target_dir: str, run_id: str
 ) -> None:
     """One CDC apply step: aggregate the batch's purchases per user and
     MERGE into the balance table (matched: accumulate; new user: insert).
+    A no-op when ``batch_id`` is at or below ``run_id``'s high-water.
     """
     spark = batch.sparkSession
+    target = _read_target(spark, target_dir)
+    applied = _applied(target_dir)
+    if batch_id <= applied.get(run_id, -1):
+        return
     src = (
         batch.where(F.col("event_type") == "purchase")
         .groupBy("user_id")
@@ -63,7 +87,7 @@ def apply_purchases_batch(
         )
     )
     merged = merge_upsert(
-        _read_target(spark, target_dir),
+        target,
         F.broadcast(src),
         keys=["user_id"],
         when_matched={
@@ -81,6 +105,8 @@ def apply_purchases_batch(
     shutil.rmtree(staged, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
     merged.write.mode("overwrite").parquet(staged)
+    with open(os.path.join(staged, TXN_FILE), "w") as f:
+        json.dump({**applied, run_id: batch_id}, f)
     if os.path.isdir(target_dir):
         os.rename(target_dir, old)
     os.rename(staged, target_dir)
@@ -88,24 +114,13 @@ def apply_purchases_batch(
 
 
 def run_merge_apply(
-    spark: SparkSession,
-    events_dir: str,
-    events_schema: str,
-    target_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = 1,
+    spark: SparkSession, events_dir: str, target_dir: str, checkpoint_dir: str
 ) -> None:
-    """Drain an events directory through the CDC apply loop (AvailableNow)."""
-    reader = spark.readStream.schema(events_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(events_dir)
-        .writeStream.foreachBatch(
-            lambda b, i: apply_purchases_batch(b, i, target_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain an events directory, one file per micro-batch, through the
+    CDC apply loop."""
+    run_id = run_id_for_checkpoint(checkpoint_dir)
+    drain(
+        file_stream(spark, events_dir),
+        checkpoint_dir,
+        lambda b, i: apply_purchases_batch(b, i, target_dir, run_id),
     )
-    q.awaitTermination()

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from .. import pipeline
 from ..functions.money import cents, dollars
+from .drain import drain, ensure_table, file_stream, state_partitions
 
 BARS_TABLE = "ohlc_bars_state"
 
@@ -80,11 +81,7 @@ def _merge(state: DataFrame) -> DataFrame:
 
 
 def ensure_state_table(spark: SparkSession, db: str) -> None:
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {db}.{BARS_TABLE} ({_STATE_COLS}) "
-        f"USING {pipeline._fmt(spark)} PARTITIONED BY (date)"
-    )
+    ensure_table(spark, db, BARS_TABLE, _STATE_COLS, "date")
 
 
 def process_events_batch(batch: DataFrame, batch_id: int, db: str) -> None:
@@ -92,48 +89,34 @@ def process_events_batch(batch: DataFrame, batch_id: int, db: str) -> None:
     ensure_state_table(spark, db)
     # state volume is orders of magnitude below raw events, but every
     # micro-batch pays per-partition task/commit overhead on each of its
-    # 3 shuffles (partials agg, state read, date repartition) — size the
-    # shuffle to the state, not the session default (save/restore: the
-    # caller's session is not ours to reconfigure — streaming._drain's
-    # pattern)
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "8")
-    try:
-        _process_events_batch(spark, batch, batch_id, db)
-    finally:
-        spark.conf.set(conf_key, prior)
-
-
-def _process_events_batch(
-    spark: SparkSession, batch: DataFrame, batch_id: int, db: str
-) -> None:
-    new = (
-        _partials(batch)
-        .withColumn("src_batch", F.lit(batch_id).cast("bigint"))
-        .persist()
-    )
-    dates = [r.date for r in new.select("date").distinct().collect()]
-    if not dates:
+    # 3 shuffles (partials agg, state read, date repartition)
+    with state_partitions(spark):
+        new = (
+            _partials(batch)
+            .withColumn("src_batch", F.lit(batch_id).cast("bigint"))
+            .persist()
+        )
+        dates = [r.date for r in new.select("date").distinct().collect()]
+        if not dates:
+            new.unpersist()
+            return
+        # replay guard: a re-delivered batch_id (state committed, checkpoint
+        # offset lost) must not fold on top of its own previous contribution
+        stored = spark.table(f"{db}.{BARS_TABLE}").where(
+            F.col("date").isin(dates) & (F.col("src_batch") != F.lit(batch_id))
+        )
+        # per-batch partials are kept (merge happens at read/compaction):
+        # the rewrite of a touched date is then a pure function of
+        # (stored minus this batch, this batch) — idempotent under replay.
+        # repartition by date: without it every batch writes
+        # shuffle.partitions files per touched date and the NEXT batch's
+        # state read pays the exploding listing (measured 6x drain cost);
+        # state volume per date is tiny relative to events, so one writer
+        # per date is the right trade here (unlike raw-event writes).
+        out = stored.unionByName(new).repartition(F.col("date"))
+        # dynamic partition overwrite of exactly the touched dates
+        pipeline._insert(out, f"{db}.{BARS_TABLE}", overwrite=True)
         new.unpersist()
-        return
-    # replay guard: a re-delivered batch_id (state committed, checkpoint
-    # offset lost) must not fold on top of its own previous contribution
-    stored = spark.table(f"{db}.{BARS_TABLE}").where(
-        F.col("date").isin(dates) & (F.col("src_batch") != F.lit(batch_id))
-    )
-    # per-batch partials are kept (merge happens at read/compaction):
-    # the rewrite of a touched date is then a pure function of
-    # (stored minus this batch, this batch) — idempotent under replay.
-    # repartition by date: without it every batch writes
-    # shuffle.partitions files per touched date and the NEXT batch's
-    # state read pays the exploding listing (measured 6x drain cost);
-    # state volume per date is tiny relative to events, so one writer
-    # per date is the right trade here (unlike raw-event writes).
-    out = stored.unionByName(new).repartition(F.col("date"))
-    # dynamic partition overwrite of exactly the touched dates
-    pipeline._insert(out, f"{db}.{BARS_TABLE}", overwrite=True)
-    new.unpersist()
 
 
 def compact_state(spark: SparkSession, db: str) -> None:
@@ -153,28 +136,15 @@ def compact_state(spark: SparkSession, db: str) -> None:
 
 
 def run_ohlc_stream(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    db: str,
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, events_dir: str, checkpoint_dir: str, db: str
 ) -> None:
-    """Drain an events directory into the bar-state table (AvailableNow)."""
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
+    """Drain an events directory, one file per micro-batch, into the
+    bar-state table."""
+    drain(
+        file_stream(spark, events_dir),
+        checkpoint_dir,
+        lambda b, i: process_events_batch(b, i, db=db),
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(events_dir)
-        .writeStream.foreachBatch(lambda b, i: process_events_batch(b, i, db=db))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def rendered_bars(spark: SparkSession, db: str) -> DataFrame:

@@ -11,9 +11,8 @@ Design notes:
     batch pipeline's atomic partition overwrites (pipeline._insert) —
     exactly-once per partition under retries because an overwrite of the
     same date is idempotent.
-  * `Trigger.AvailableNow` drains the source then stops: the daily-cron
-    parity mode. A live deployment would use a processing-time trigger
-    instead; nothing else changes.
+  * The stream runs on streaming/drain.py's `Trigger.AvailableNow`
+    drain: it empties the source then stops, the daily-cron parity mode.
   * Dates inside one micro-batch are processed ascending so day D's
     7-day cumulate sees day D-1 already promoted, preserving the
     sequential-date contract with no scheduler.
@@ -31,6 +30,7 @@ from pyspark.sql import functions as F
 from .. import pipeline
 from ..operators.dq import dq_checks
 from ..schemas import REFERENCE_TICKERS, STOCK_PRICE_SCHEMA
+from .drain import drain, file_stream
 
 DQ_TABLE = "dq_results"
 
@@ -74,32 +74,15 @@ def process_bars_batch(
         batch.unpersist()
 
 
-def stream_bars(
-    spark: SparkSession, bars_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Parquet file source of staged bar rows (the stream's landing zone).
-
-    ``max_files_per_trigger`` bounds micro-batch size — the production
-    backpressure knob: without it a backlog (or the first AvailableNow
-    drain over months of files) lands as ONE giant batch sized by the
-    backlog, not by the cluster.
-    """
-    reader = spark.readStream.schema(STOCK_PRICE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(bars_dir)
-
-
 def run_pipeline_stream(
     spark: SparkSession,
     bars_dir: str,
     checkpoint_dir: str,
     db: str = pipeline.DEFAULT_DB,
     tickers: list[str] | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
-):
-    """Start the streaming pipeline; AvailableNow drains-and-stops.
+) -> None:
+    """Drain the staged bar files through the pipeline and stop.
 
     The checkpoint directory carries source offsets across restarts, so
     re-running after a crash reprocesses only unseen files; combined
@@ -111,15 +94,8 @@ def run_pipeline_stream(
     the already-promoted history (depends_on_past across batches, not
     just within one).
     """
-    q = (
-        stream_bars(spark, bars_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            lambda b, i: process_bars_batch(b, i, db=db, tickers=tickers)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=available_now)
-        .start()
+    drain(
+        file_stream(spark, bars_dir, STOCK_PRICE_SCHEMA, max_files_per_trigger),
+        checkpoint_dir,
+        lambda b, i: process_bars_batch(b, i, db=db, tickers=tickers),
     )
-    if available_now:
-        q.awaitTermination()
-    return q

@@ -39,6 +39,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 
 from ..sources import snapshots
+from .drain import drain
 
 
 def run_id_for_checkpoint(checkpoint_dir: str) -> str:
@@ -80,10 +81,7 @@ def snapshot_append_sink(
 
 
 def drain_to_snapshots(
-    stream_df: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str | None = None,
-    run_id: str | None = None,
+    stream_df: DataFrame, table_dir: str, checkpoint_dir: str | None = None
 ) -> str:
     """Drain an AvailableNow stream into ``table_dir`` via txn
     snapshot commits; blocks until every pending micro-batch committed.
@@ -95,15 +93,6 @@ def drain_to_snapshots(
     instead of being mistaken for replays."""
     if checkpoint_dir is None:
         checkpoint_dir = tempfile.mkdtemp(prefix="snap_sink_ckpt_")
-    if run_id is None:
-        run_id = run_id_for_checkpoint(checkpoint_dir)
-    q = (
-        stream_df.writeStream.foreachBatch(
-            snapshot_append_sink(table_dir, run_id)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_id = run_id_for_checkpoint(checkpoint_dir)
+    drain(stream_df, checkpoint_dir, snapshot_append_sink(table_dir, run_id))
     return run_id

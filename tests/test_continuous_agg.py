@@ -38,9 +38,7 @@ def test_incremental_folds_equal_batch_recompute(spark, sf_dir, db, tmp_path):
     # every batch touches every date partition)
     ev.repartition(4).write.parquet(events_dir)
 
-    continuous_agg.run_ohlc_stream(
-        spark, events_dir, str(tmp_path / "ckpt"), db=db, max_files_per_trigger=1
-    )
+    continuous_agg.run_ohlc_stream(spark, events_dir, str(tmp_path / "ckpt"), db=db)
     got = _rows(continuous_agg.rendered_bars(spark, db))
     want = _rows(analytics.ohlc_bars(ev))
     assert got == want
@@ -109,8 +107,7 @@ def test_compaction_is_render_invariant_and_idempotent(
     events_dir = str(tmp_path / "ev_cmp")
     ev.repartition(3).write.parquet(events_dir)
     continuous_agg.run_ohlc_stream(
-        spark, events_dir, str(tmp_path / "ckpt_cmp"), db=db,
-        max_files_per_trigger=1,
+        spark, events_dir, str(tmp_path / "ckpt_cmp"), db=db
     )
     before = _rows(continuous_agg.rendered_bars(spark, db))
     n_partials = spark.table(f"{db}.{continuous_agg.BARS_TABLE}").count()

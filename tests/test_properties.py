@@ -2427,7 +2427,7 @@ def test_hll_sink_merge_invariant_to_batching(spark, assignment):
     idempotent)."""
     import shutil
 
-    from airflow_iceberg_pipeline_stock_tracker_spark.streaming import hll_sink
+    from airflow_iceberg_pipeline_stock_tracker_spark.streaming import sketch_sinks
 
     db = "hll_prop_test"
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
@@ -2444,16 +2444,16 @@ def test_hll_sink_merge_invariant_to_batching(spark, assignment):
     ]
     for b in sorted(set(assignment)):
         batch_rows = [r for r, a in zip(all_rows, assignment) if a == b]
-        hll_sink.process_hll_batch(
+        sketch_sinks.process_hll_batch(
             spark.createDataFrame(batch_rows, schema), b, db=db
         )
     merged = sorted(
-        map(tuple, hll_sink.merged_registers(spark, db).collect())
+        map(tuple, sketch_sinks.merged_registers(spark, db).collect())
     )
     onepass = sorted(
         map(
             tuple,
-            hll_sink._batch_registers(
+            sketch_sinks._batch_registers(
                 spark.createDataFrame(all_rows, schema)
             ).collect(),
         )

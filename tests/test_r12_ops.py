@@ -109,7 +109,7 @@ def test_hll_sink_merge_equals_onepass_across_batches(spark, tmp_path):
     """Users split (and OVERLAPPING) across micro-batches: the stored
     per-batch register partials max-merged at read must equal the
     one-pass build over all events, register for register."""
-    from airflow_iceberg_pipeline_stock_tracker_spark.streaming import hll_sink
+    from airflow_iceberg_pipeline_stock_tracker_spark.streaming import sketch_sinks
 
     base = dt.datetime(2024, 3, 1)
     # 600 users over two batches with a 200-user overlap
@@ -130,17 +130,17 @@ def test_hll_sink_merge_equals_onepass_across_batches(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    hll_sink.process_hll_batch(df0, 0, db=db)
-    hll_sink.process_hll_batch(df1, 1, db=db)
+    sketch_sinks.process_hll_batch(df0, 0, db=db)
+    sketch_sinks.process_hll_batch(df1, 1, db=db)
 
     merged = {
         (r.event_type, r.bucket): r.maxrho
-        for r in hll_sink.merged_registers(spark, db).collect()
+        for r in sketch_sinks.merged_registers(spark, db).collect()
     }
     ev = spark.read.parquet(os.path.join(d, "events.parquet"))
     onepass = {
         (r.event_type, r.bucket): r.maxrho
-        for r in hll_sink._batch_registers(ev).collect()
+        for r in sketch_sinks._batch_registers(ev).collect()
     }
     assert merged == onepass
     _fresh_db(spark, db)
@@ -150,7 +150,7 @@ def test_hll_sink_replay_is_idempotent_by_partition_layout(spark, tmp_path):
     """Re-delivering a batch_id (the at-least-once window) must leave
     the state table byte-identical: the write targets only its own
     src_batch partition with a pure function of the batch."""
-    from airflow_iceberg_pipeline_stock_tracker_spark.streaming import hll_sink
+    from airflow_iceberg_pipeline_stock_tracker_spark.streaming import sketch_sinks
 
     base = dt.datetime(2024, 3, 1)
     df = spark.createDataFrame(
@@ -160,22 +160,22 @@ def test_hll_sink_replay_is_idempotent_by_partition_layout(spark, tmp_path):
     )
     db = "hll_replay_test"
     _fresh_db(spark, db)
-    hll_sink.process_hll_batch(df, 0, db=db)
+    sketch_sinks.process_hll_batch(df, 0, db=db)
     before = sorted(
-        map(tuple, spark.table(f"{db}.{hll_sink.REGISTERS_TABLE}").collect())
+        map(tuple, spark.table(f"{db}.{sketch_sinks.REGISTERS_TABLE}").collect())
     )
-    hll_sink.process_hll_batch(df, 0, db=db)  # replay
+    sketch_sinks.process_hll_batch(df, 0, db=db)  # replay
     after = sorted(
-        map(tuple, spark.table(f"{db}.{hll_sink.REGISTERS_TABLE}").collect())
+        map(tuple, spark.table(f"{db}.{sketch_sinks.REGISTERS_TABLE}").collect())
     )
     assert before == after
     # and a replay with a STALE subset of the batch (offset lost, source
     # re-listed differently) still converges to that batch's pure
     # function — the partition is overwritten, not appended
-    hll_sink.process_hll_batch(df.limit(50), 0, db=db)
-    hll_sink.process_hll_batch(df, 0, db=db)
+    sketch_sinks.process_hll_batch(df.limit(50), 0, db=db)
+    sketch_sinks.process_hll_batch(df, 0, db=db)
     final = sorted(
-        map(tuple, spark.table(f"{db}.{hll_sink.REGISTERS_TABLE}").collect())
+        map(tuple, spark.table(f"{db}.{sketch_sinks.REGISTERS_TABLE}").collect())
     )
     assert final == before
     _fresh_db(spark, db)

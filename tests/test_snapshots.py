@@ -101,6 +101,22 @@ def test_vacuum_keep_last_zero_removes_expired_dirs(tdir):
     assert _snap_dirs(tdir) == ["snap-2"]
 
 
+def test_equality_delete_on_branch_only_table_refuses(tdir):
+    """A table whose every commit is branch-staged has no main head; an
+    equality delete must refuse like delete_where does, not publish a
+    main snapshot with no data dirs (metadata-only, no Spark)."""
+    snapshots.create_branch(tdir, "audit")
+    os.makedirs(os.path.join(tdir, "snap-0"))
+    snapshots._commit_entry(tdir, "snap-0", "append", branch="audit")
+    with pytest.raises(ValueError, match="no main snapshot"):
+        snapshots._delete_commit_entry(
+            tdir, {"dir": "del-xxxx", "kind": "eq", "cols": ["x"]}, None
+        )
+    man = snapshots._committed(tdir)
+    assert man["current"] == 0
+    assert [s["id"] for s in man["snapshots"]] == [1]
+
+
 def test_concurrent_writers_no_lost_update(spark, tdir):
     """Two threads commit appends concurrently; the manifest-version CAS
     must arbitrate so BOTH snapshots land (no last-writer-wins lost
